@@ -40,6 +40,7 @@ from fenix_spark.functions.texthash import (
     tokens,
     word_shingles,
 )
+from fenix_spark.checkpoint import checkpoint_eager as _ckpt_eager
 from fenix_spark.checkpoint import checkpoint_lazy as _ckpt_lazy
 
 
@@ -222,6 +223,52 @@ def jaccard(s1: Column, s2: Column) -> Column:
     return inter / (F.size(s1) + F.size(s2) - inter)
 
 
+def signed_set_groups(sets: DataFrame, num_components: int = 24) -> DataFrame:
+    """(ids, s, sz, sig) per DISTINCT set of ``sets`` (id, s): the
+    sorted member ids, the set, its size and its MinHash signature —
+    materialized once (eager checkpoint).
+
+    The frame feeds SIX consumers in :func:`minhash_neardup_pairs`
+    (both band-join sides, both verify sides, both member-expansion
+    sides, intra-group pairs). The size and signature columns live IN
+    the checkpoint, so the interpreted per-set signature runs once per
+    distinct set instead of once per band-join side.
+
+    The explicit hash repartition on ``s`` is the exchange the grouping
+    aggregate reuses (no second shuffle). Its partition count is
+    ``spark.sql.shuffle.partitions`` but never below the session's
+    parallelism: a count-less shuffle lets AQE coalesce the small
+    groups shuffle into ONE task and serializes the signature pass
+    onto one core, while the configured width is what keeps each task
+    bounded on large inputs (this shuffle carries every document's
+    token set; ``session.recommend_confs`` sizes it).
+
+    The checkpoint is EAGER: the consumers' jobs start concurrently
+    (broadcast builds), and with a lazy checkpoint each computes the
+    groups; the first to finish truncates the lineage, GC drops its
+    SQL metrics, and the others' tasks then report to accumulators
+    that no longer exist ("Failed to update accumulator" ERRORs)."""
+    from fenix_spark.functions.texthash import minhash_signature_hashed
+
+    spark = sets.sparkSession
+    width = max(
+        spark.sparkContext.defaultParallelism,
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+    )
+    return (
+        sets.repartition(width, "s")
+        .groupBy("s")
+        .agg(F.sort_array(F.collect_list("id")).alias("ids"))
+        .select(
+            "ids",
+            "s",
+            F.size("s").alias("sz"),
+            minhash_signature_hashed("s", num_components).alias("sig"),
+        )
+        .transform(_ckpt_eager)
+    )
+
+
 def minhash_neardup_pairs(
     df: DataFrame,
     text_col: str,
@@ -268,8 +315,6 @@ def minhash_neardup_pairs(
     md5'd once at tokenize time and only 4-byte hashes flow through
     the band join and the verify intersect.
     """
-    from fenix_spark.functions.texthash import minhash_signature_hashed
-
     sets = hashed_token_sets(df, text_col, id_col, shingle)
 
     # Group identical sets FIRST: signatures/bands/jaccard depend only
@@ -278,21 +323,8 @@ def minhash_neardup_pairs(
     # group of m exact-duplicate docs costs 1 LSH row instead of m and
     # removes m² candidate pairs from the verify join. On crawl-scale
     # corpora (30-50% exact dups) that is the dominant term.
-    groups = sets.groupBy("s").agg(F.sort_array(F.collect_list("id")).alias("ids"))
-    # The groups frame feeds SIX consumers (signature arm, both verify
-    # sides, both member-expansion sides, intra-group pairs). Exchange
-    # reuse does not reliably canonicalize across them, so without an
-    # explicit materialization the tokenize+hash+groupBy subtree is
-    # recomputed per consumer. localCheckpoint truncates the lineage:
-    # one computation, executor-local storage, GC'd with the reference.
-    groups = groups.transform(_ckpt_lazy)
-    reps = groups.select(F.element_at("ids", 1).alias("id"), "s")
-    signed = reps.select(
-        "id",
-        "s",
-        F.size("s").alias("sz"),
-        minhash_signature_hashed("s", num_components).alias("sig"),
-    )
+    groups = signed_set_groups(sets, num_components)
+    signed = groups.select(F.element_at("ids", 1).alias("id"), "s", "sz", "sig")
     # Length filter (classic lossless prefix-family bound, e.g. Arasu
     # et al. / ppjoin): J(A,B) = |A∩B|/|A∪B| ≤ min(|A|,|B|)/max(|A|,|B|),
     # so candidate pairs whose set sizes differ by more than the
@@ -356,8 +388,8 @@ def minhash_neardup_pairs(
             .where(length_ok)
             .select("id_l", "id_r")
         )
-    l = reps.select(F.col("id").alias("id_l"), F.col("s").alias("s_l"))
-    r = reps.select(F.col("id").alias("id_r"), F.col("s").alias("s_r"))
+    l = signed.select(F.col("id").alias("id_l"), F.col("s").alias("s_l"))
+    r = signed.select(F.col("id").alias("id_r"), F.col("s").alias("s_r"))
     rep_pairs = (
         cand.join(l, "id_l")
         .join(r, "id_r")

@@ -4,8 +4,11 @@ import time
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from fenix_spark.functions.texthash import minhash_signature_hashed
-from fenix_spark.operators.dedup import hashed_token_sets, lsh_candidates
+from fenix_spark.operators.dedup import (
+    hashed_token_sets,
+    lsh_candidates,
+    signed_set_groups,
+)
 
 SF_DIR = "/root/testdata/sf0.1"
 
@@ -21,23 +24,15 @@ docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
 print("docs:", docs.count())
 
 t0 = time.time()
+# the shipped grouping: one exchange on s, signature inside the eager
+# checkpoint (operators/dedup.py:signed_set_groups)
 sets = hashed_token_sets(docs, "text", "doc_id", 1)
-groups = sets.groupBy("s").agg(F.sort_array(F.collect_list("id")).alias("ids"))
-groups = groups.localCheckpoint(eager=False)
+groups = signed_set_groups(sets, 24)
 n_groups = groups.count()
-t1 = time.time()
-print(f"groups (tokenize+hash+groupBy+checkpoint): {n_groups} rows, {t1-t0:.2f}s")
-
-reps = groups.select(F.element_at("ids", 1).alias("id"), "s")
-signed = reps.select(
-    "id", "s", F.size("s").alias("sz"),
-    minhash_signature_hashed(F.col("s"), 24).alias("sig"),
-)
-signed = signed.localCheckpoint(eager=False)
-n_signed = signed.count()
 t2 = time.time()
-print(f"signed (24-comp signatures): {n_signed} rows, {t2-t1:.2f}s")
+print(f"groups (tokenize+hash+groupBy+signature): {n_groups} rows, {t2-t0:.2f}s")
 
+signed = groups.select(F.element_at("ids", 1).alias("id"), "s", "sz", "sig")
 cand = lsh_candidates(signed, 3, 8, carry=("sz",)).where(
     F.least("sz_l", "sz_r") >= (0.95 - 1e-6) * F.greatest("sz_l", "sz_r")
 ).select("id_l", "id_r")

@@ -3,11 +3,14 @@ plain union-find model, plus the dedup-pipeline integration."""
 
 from __future__ import annotations
 
+import contextlib
+
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+import fenix_spark.operators.components as components_mod
 from fenix_spark.operators.components import connected_components, dedup_keep_list
 
 
@@ -102,3 +105,88 @@ def test_keep_list_prefer_col_keeps_best_copy(spark):
     # default policy unchanged: min id per component
     kept_min = sorted(r.id for r in dedup_keep_list(df, pairs, "id").collect())
     assert kept_min == [1, 4, 10, 20, 30]
+
+
+_PAIR_GRAPHS = st.lists(
+    st.tuples(st.integers(0, 40), st.integers(0, 40)), min_size=1, max_size=60
+)
+
+
+@contextlib.contextmanager
+def _driver_cap(cap):
+    """Run with ``_MAX_DRIVER_PAIRS`` set to ``cap``: 0 forces
+    distributed propagation for any non-empty pair list."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(components_mod, "_MAX_DRIVER_PAIRS", cap)
+        yield
+
+
+_PATHS = (components_mod._MAX_DRIVER_PAIRS, 0)  # driver, propagation
+
+
+@given(edges=_PAIR_GRAPHS, as_str=st.booleans())
+@settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
+def test_driver_and_propagation_paths_agree(spark, edges, as_str):
+    """Both paths give the same node→component map and the same keep
+    list, with and without ``prefer_col``. String ids (``str(i)``, so
+    "10" < "9") check that both order ids the way Spark does; the
+    ``prefer_col`` tie-break negates the id, so it is numeric-only."""
+    key = str if as_str else int
+    ddl = "string" if as_str else "bigint"
+    edges = [(key(a), key(b)) for a, b in edges]
+    pairs = spark.createDataFrame(edges, f"id_a {ddl}, id_b {ddl}")
+    df = spark.createDataFrame(
+        [(key(i), None if i % 6 == 0 else float(i * 7 % 5)) for i in range(45)],
+        f"id {ddl}, q double",
+    )
+
+    def comp_map():
+        return {r["node"]: r["component"] for r in connected_components(pairs).collect()}
+
+    def kept(prefer):
+        out = dedup_keep_list(df, pairs, "id", prefer_col=prefer)
+        return sorted(r.id for r in out.collect())
+
+    prefers = (None,) if as_str else (None, "q")
+    got = []
+    for cap in _PATHS:
+        with _driver_cap(cap):
+            got.append((comp_map(), [kept(p) for p in prefers]))
+    assert got[0] == got[1]
+    assert got[0][0] == _union_find([(a, b) for a, b in edges if a != b])
+
+
+def test_nonconvergence_raises_on_both_paths(spark):
+    """``max_iter`` bounds propagation rounds on both paths: a 13-node
+    chain has hop distance 12 to its min id, so it needs 13 rounds."""
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(12)], "id_a bigint, id_b bigint")
+    for cap in _PATHS:
+        with _driver_cap(cap):
+            with pytest.raises(RuntimeError, match="converge"):
+                connected_components(pairs, max_iter=12)
+            got = connected_components(pairs, max_iter=13)
+            assert {r["component"] for r in got.collect()} == {0}
+
+
+def test_driver_path_is_local_table_scan(spark):
+    """The driver path returns an Arrow-built local relation: it plans
+    as ``LocalTableScan`` — not an RDD scan, which would start Python
+    workers to serialize the rows."""
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], "id_a bigint, id_b bigint")
+    plan = connected_components(pairs)._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan
+
+
+@pytest.mark.parametrize(
+    "ddl, edges, want",
+    [
+        ("bigint", [(2**40 + 1, 2**40), (5, 2**40 + 1)], {2**40: 5, 2**40 + 1: 5, 5: 5}),
+        ("string", [("b", "a"), ("c", "b"), ("y", "x")], {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}),
+    ],
+)
+def test_driver_path_keeps_id_type(spark, ddl, edges, want):
+    pairs = spark.createDataFrame(edges, f"id_a {ddl}, id_b {ddl}")
+    comp = connected_components(pairs)
+    assert [f.dataType.simpleString() for f in comp.schema.fields] == [ddl, ddl]
+    assert {r["node"]: r["component"] for r in comp.collect()} == want

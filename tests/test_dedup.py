@@ -7,6 +7,8 @@ guarantees, hash stability, bounds).
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -373,3 +375,91 @@ def test_fingerprints_retired_row_still_mirrors(spark):
     want = sorted(map(tuple, con.execute(suite._fingerprints_sql()).fetchall()))
     con.close()
     assert got == want and len(got) > 0
+
+
+def _groups_width(spark):
+    return max(
+        spark.sparkContext.defaultParallelism,
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+    )
+
+
+def _groups_exchange_width(groups):
+    plan = groups._jdf.queryExecution().executedPlan().initialPlan().toString()
+    (width,) = re.findall(r"hashpartitioning\(s#\d+, (\d+)\)", plan)
+    return int(width)
+
+
+@pytest.mark.parametrize("shuffle_partitions", [1, 96])
+def test_signed_set_groups_width_follows_shuffle_conf(spark, monkeypatch, shuffle_partitions):
+    """The groups exchange takes ``spark.sql.shuffle.partitions`` (what
+    ``session.recommend_confs`` sizes for large inputs) and never drops
+    below ``defaultParallelism``."""
+    import fenix_spark.operators.dedup as dedup_mod
+
+    monkeypatch.setattr(dedup_mod, "_ckpt_eager", lambda df: df)
+    sets = spark.createDataFrame([(1, [3, 5]), (2, [3, 5]), (3, [7])], "id bigint, s array<int>")
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    try:
+        groups = dedup_mod.signed_set_groups(sets, 4)
+        want = _groups_width(spark)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    assert want == max(spark.sparkContext.defaultParallelism, shuffle_partitions)
+    assert _groups_exchange_width(groups) == want
+    assert sorted(r.ids for r in groups.collect()) == [[1, 2], [3]]
+
+
+def test_minhash_groups_one_exchange_one_signature_pass(spark, documents, monkeypatch):
+    """The groups materialization is one hash exchange on ``s`` (the
+    configured shuffle width, never below the session's parallelism)
+    feeding the grouping aggregate — no
+    second shuffle — and it is the ONLY place the signature is
+    computed: the pair plan reads it from the checkpoint."""
+    import fenix_spark.operators.dedup as dedup_mod
+
+    handed = []  # the frame handed to the groups checkpoint
+    real = dedup_mod._ckpt_eager
+    monkeypatch.setattr(dedup_mod, "_ckpt_eager", lambda df: handed.append(df) or real(df))
+    pairs = minhash_neardup_pairs(documents, "text", "doc_id", threshold=0.9)
+    (groups,) = handed
+    adaptive = groups._jdf.queryExecution().executedPlan()
+    lines = adaptive.initialPlan().toString().splitlines()
+    exchanges = [ln for ln in lines if "Exchange" in ln]
+    keyed_on_s = [ln for ln in exchanges if "hashpartitioning(s#" in ln]
+    assert len(keyed_on_s) == 1, exchanges
+    assert f", {_groups_width(spark)})" in keyed_on_s[0]
+    agg = next(i for i, ln in enumerate(lines) if "Aggregate" in ln and "keys=[s#" in ln)
+    first_exchange_below = next(ln for ln in lines[agg:] if "Exchange" in ln)
+    assert first_exchange_below == keyed_on_s[0]
+
+    # the signature is a result expression of the grouping aggregate
+    groups_plan = groups._jdf.queryExecution().optimizedPlan().toString()
+    pairs_plan = pairs._jdf.queryExecution().optimizedPlan().toString()
+    assert groups_plan.count(" AS sig#") == 1
+    assert " AS sig#" not in pairs_plan
+    assert "array_min(transform" not in pairs_plan
+
+
+def test_minhash_groups_stage_uses_every_core(spark, documents, monkeypatch):
+    """The stage that materializes the groups (aggregate + signature)
+    runs at least ``defaultParallelism`` tasks even on a corpus whose
+    groups shuffle is far below AQE's coalescing size."""
+    from fenix_spark.checkpoint import checkpoint_lazy
+    from fenix_spark.operators.runstats import format_stats, run_with_stats
+
+    import fenix_spark.operators.dedup as dedup_mod
+
+    seen = {}
+
+    def record(df):  # lazy, so the materialization runs under stats
+        seen["ckpt"] = checkpoint_lazy(df)
+        return seen["ckpt"]
+
+    monkeypatch.setattr(dedup_mod, "_ckpt_eager", record)
+    minhash_neardup_pairs(documents.limit(300), "text", "doc_id", threshold=0.9)
+    _, stats = run_with_stats(seen["ckpt"], "count")
+    readers = [s for s in stats if s.shuffle_read_bytes > 0 and s.shuffle_write_bytes > 0]
+    assert readers, format_stats(stats)
+    assert readers[0].tasks >= spark.sparkContext.defaultParallelism, format_stats(stats)
