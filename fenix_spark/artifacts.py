@@ -19,7 +19,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from fenix_spark import catalog
-from fenix_spark.operators.coder import CodingConfig, train_coding
+from fenix_spark.operators.coder import CodingConfig, read_coding, train_coding
 from fenix_spark.operators.index import build_index
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -88,11 +88,9 @@ def _check_source_stamp(sf_dir: str) -> None:
 
 
 # ensure_* results memoized per (session, sf_dir): artifacts are
-# immutable once built, re-reading footers + _SUCCESS probes on every
-# query call cost ~1.3 s in the 3-arm ivfpq row, and returning the
-# SAME DataFrame objects lets coder.coding_to_numpy's per-instance
-# memo hit across arms. Weak-keyed on the session so a stopped
-# session's frames don't leak.
+# immutable once built, and re-reading footers + _SUCCESS probes on
+# every query call cost ~1.3 s in the 3-arm ivfpq row. Weak-keyed on
+# the session so a stopped session's frames don't leak.
 _ENSURE_MEMO: "weakref.WeakKeyDictionary" = None  # type: ignore[assignment]
 
 
@@ -120,7 +118,7 @@ def _ensure_artifacts(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, Data
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         coding = train_coding(emb, "embedding", DEFAULT_CONFIG)
         coding.coalesce(1).write.mode("overwrite").parquet(cpath)
-    coding = spark.read.parquet(cpath)
+    coding = read_coding(spark, cpath)
     if not _complete(ipath):
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         build_index(emb, "embedding", coding, ipath)
@@ -181,7 +179,7 @@ def _ensure_ivfpq(spark: SparkSession, sf_dir: str):
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         fine = train_coding(emb, "embedding", FINE_CONFIG)
         fine.coalesce(1).write.mode("overwrite").parquet(fpath)
-    fine = spark.read.parquet(fpath)
+    fine = read_coding(spark, fpath)
     if not _complete(ipath):
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         build_ivfpq_index(emb, "embedding", coarse, fine, ipath)
@@ -245,12 +243,12 @@ def _ensure_ivfpq_residual(spark: SparkSession, sf_dir: str):
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         coarse = train_coding(emb, "embedding", RCOARSE_CONFIG)
         coarse.coalesce(1).write.mode("overwrite").parquet(cpath)
-    coarse = spark.read.parquet(cpath)
+    coarse = read_coding(spark, cpath)
     if not _complete(fpath):
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         fine = train_residual_coding(emb, "embedding", coarse, RFINE_CONFIG)
         fine.coalesce(1).write.mode("overwrite").parquet(fpath)
-    fine = spark.read.parquet(fpath)
+    fine = read_coding(spark, fpath)
     if not _complete(ipath):
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         build_ivfpq_residual_index(emb, "embedding", coarse, fine, ipath)

@@ -610,120 +610,113 @@ class Server:
         return data, expr, cols
 
     def _direct_dataset(self, spec: dict):
-        """A plain single-table read (no filter/select) can be served
-        straight from the layout's own parquet files — zero Spark job,
-        zero copy, any table size. That includes the INDEXED read
+        """``(dataset, pushed filter, pushed columns)`` for a
+        files-pinned shard ticket (minted by get_flight_info's per-file
+        endpoints; ``_do_get`` sends only tickets carrying ``files``
+        here). The read is PINNED to the ticket's manifest generation,
+        so N parallel shard fetches stay consistent across a concurrent
+        compact — the retention window keeps the superseded generation
+        alive for exactly one follow-on commit, and an expired pin
+        fails loudly telling the client to re-plan rather than silently
+        mixing generations. That includes the INDEXED read
         (``coding``+``column``): the co-written index table is plain
-        hive-partitioned parquet, so ``read_table(name, coding=…)``
-        over the wire streams directly instead of rewriting the whole
-        table into a spool (the r11 ``weak``: 100 TB of write
-        amplification per indexed wire read). Returns None when the
-        spec needs compute (filter/select) or the layout isn't
-        servable.
-
-        A ticket may carry ``gen`` + ``files`` (minted by
-        get_flight_info's per-file endpoints): the read is then PINNED
-        to that manifest generation, so N parallel shard fetches stay
-        consistent across a concurrent compact — the retention window
-        keeps the superseded generation alive for exactly one follow-on
-        commit, and an expired pin fails loudly telling the client to
-        re-plan rather than silently mixing generations. Returns
-        ``(dataset, pushed filter, pushed columns)`` for pinned
-        tickets: a shard ticket may carry a PUSHABLE filter/select
-        (r13 — filters are row-local, so per-shard evaluation equals
-        the whole-table filter; the parallel filtered fetch), and one
-        outside the subset fails loud because a shard read has no
-        spool fallback."""
+        hive-partitioned parquet. A shard ticket may carry a PUSHABLE
+        filter/select (r13 — filters are row-local, so per-shard
+        evaluation equals the whole-table filter; the parallel filtered
+        fetch), and one outside the subset fails loud because a shard
+        read has no spool fallback. A malformed ticket (no single table
+        name, or ``files`` not a non-empty list of path strings) raises
+        ``ValueError``."""
         from fenix_spark.catalog import source_path
         from fenix_spark.manifest import _gen_dir
 
-        source = spec.get("source")
+        source, pinned = spec.get("source"), spec.get("files")
         if not isinstance(source, str) or ":" in source:
-            return None
-        pinned = spec.get("files")
-        if pinned is not None:
-            coding, column = spec.get("coding"), spec.get("column")
-            if coding is not None:
-                # pinned INDEX shard (S9-over-wire parallel): the index
-                # layout is rewritten in place (no generations), but
-                # parquet part names are unique per write — a ticket
-                # spanning a concurrent re-make fails the membership
-                # check below instead of mixing file sets
-                if column is None:
-                    raise ValueError("do_get: pinned index ticket needs column")
-                from fenix_spark.catalog import index_path
+            raise ValueError("do_get: a files-pinned ticket names one table")
+        if not (
+            isinstance(pinned, list)
+            and pinned
+            and all(isinstance(f, str) for f in pinned)
+        ):
+            raise ValueError(
+                "do_get: ticket 'files' must be a non-empty list of file "
+                "paths — re-plan via get_flight_info"
+            )
+        coding, column = spec.get("coding"), spec.get("column")
+        if coding is not None:
+            # pinned INDEX shard (S9-over-wire parallel): the index
+            # layout is rewritten in place (no generations), but
+            # parquet part names are unique per write — a ticket
+            # spanning a concurrent re-make fails the membership
+            # check below instead of mixing file sets
+            if column is None:
+                raise ValueError("do_get: pinned index ticket needs column")
+            from fenix_spark.catalog import index_path
 
-                d, gen = index_path(self.store.root, source, column, coding), None
-            else:
-                path = source_path(self.store.root, source)
-                gen = spec.get("gen")
-                d = path if gen is None else _gen_dir(path, int(gen))
-            if not os.path.isdir(d):
-                raise ValueError(
-                    f"do_get: pinned generation {gen} of {source!r} has been "
-                    "vacuumed (reads spanning more than one maintenance "
-                    "rewrite exceed the retention window) — re-plan via "
-                    "get_flight_info"
-                )
-            # per-FILE validation, not a whole-layout walk: a parallel
-            # fetch issues one do_get per shard, so an O(files) walk
-            # here is O(files²) across the read at 100k-file tables.
-            # The same invariants _hive_walk enforces hold per path:
-            # every directory component a hive segment, the leaf a
-            # visible parquet file, and no traversal tokens.
-            bad = [f for f in pinned if not _pinned_shard_ok(d, f)]
-            if bad:
-                raise ValueError(
-                    f"do_get: ticket names files not in {source!r} gen {gen}: "
-                    f"{bad[:3]} — stale plan, re-plan via get_flight_info"
-                )
-            partitioned = any("/" in f for f in pinned)
-            data = self._make_dataset(d, pinned, partitioned)
-            # r13: a shard ticket MAY carry filter/select — a pushable
-            # filter is row-local, so evaluating it per shard equals
-            # the whole-table filter exactly (the parallel filtered
-            # fetch, Client.read_table_parallel(filter=...)). A shard
-            # has no spool fallback (spooling one shard of a pinned
-            # read would break generation consistency), so an
-            # unsupported filter fails LOUD instead of silently
-            # degrading.
-            expr = cols = None
-            flt, sel = spec.get("filter"), spec.get("select")
-            if flt:
-                from fenix_spark import flight_pushdown
+            d, gen = index_path(self.store.root, source, column, coding), None
+        else:
+            path = source_path(self.store.root, source)
+            gen = spec.get("gen")
+            d = path if gen is None else _gen_dir(path, int(gen))
+        if not os.path.isdir(d):
+            raise ValueError(
+                f"do_get: pinned generation {gen} of {source!r} has been "
+                "vacuumed (reads spanning more than one maintenance "
+                "rewrite exceed the retention window) — re-plan via "
+                "get_flight_info"
+            )
+        # per-FILE validation, not a whole-layout walk: a parallel
+        # fetch issues one do_get per shard, so an O(files) walk
+        # here is O(files²) across the read at 100k-file tables.
+        # The same invariants _hive_walk enforces hold per path:
+        # every directory component a hive segment, the leaf a
+        # visible parquet file, and no traversal tokens.
+        bad = [f for f in pinned if not _pinned_shard_ok(d, f)]
+        if bad:
+            raise ValueError(
+                f"do_get: ticket names files not in {source!r} gen {gen}: "
+                f"{bad[:3]} — stale plan, re-plan via get_flight_info"
+            )
+        partitioned = any("/" in f for f in pinned)
+        data = self._make_dataset(d, pinned, partitioned)
+        # r13: a shard ticket MAY carry filter/select — a pushable
+        # filter is row-local, so evaluating it per shard equals
+        # the whole-table filter exactly (the parallel filtered
+        # fetch, Client.read_table_parallel(filter=...)). A shard
+        # has no spool fallback (spooling one shard of a pinned
+        # read would break generation consistency), so an
+        # unsupported filter fails LOUD instead of silently
+        # degrading.
+        expr = cols = None
+        flt, sel = spec.get("filter"), spec.get("select")
+        if flt:
+            from fenix_spark import flight_pushdown
 
-                expr = flight_pushdown.translate(flt, data.schema)
-                if expr is None:
-                    raise ValueError(
-                        "do_get: a files-pinned shard ticket can only carry "
-                        "a filter inside the pushdown subset (comparisons, "
-                        "AND/OR/NOT, IN, BETWEEN, edge-anchored LIKE, IS "
-                        "NULL on int/string/bool columns) — shard reads "
-                        "have no spool fallback; fetch this filter through "
-                        "a plain ticket instead"
-                    )
-            if sel:
-                if not (
-                    isinstance(sel, (list, tuple))
-                    and all(
-                        isinstance(c, str) and c in data.schema.names
-                        for c in sel
-                    )
-                ):
-                    raise ValueError(
-                        "do_get: a files-pinned shard ticket can only "
-                        "select plain columns of the layout — fetch "
-                        "computed projections through a plain ticket"
-                    )
-                cols = list(sel)
-            return data, expr, cols
-        # non-pinned specs plan through _direct_plan (which also
-        # handles filter/select pushdown); this method serves only the
-        # files-pinned shard tickets get_flight_info mints
-        plan = self._direct_plan(spec)
-        if plan is None or plan[1] is not None or plan[2] is not None:
-            return None
-        return plan[0], None, None
+            expr = flight_pushdown.translate(flt, data.schema)
+            if expr is None:
+                raise ValueError(
+                    "do_get: a files-pinned shard ticket can only carry "
+                    "a filter inside the pushdown subset (comparisons, "
+                    "AND/OR/NOT, IN, BETWEEN, edge-anchored LIKE, IS "
+                    "NULL on int/string/bool columns) — shard reads "
+                    "have no spool fallback; fetch this filter through "
+                    "a plain ticket instead"
+                )
+        if sel:
+            if not (
+                isinstance(sel, (list, tuple))
+                and all(
+                    isinstance(c, str) and c in data.schema.names
+                    for c in sel
+                )
+            ):
+                raise ValueError(
+                    "do_get: a files-pinned shard ticket can only "
+                    "select plain columns of the layout — fetch "
+                    "computed projections through a plain ticket"
+                )
+            cols = list(sel)
+        return data, expr, cols
 
     def _flight_info_endpoints(
         self,
@@ -813,8 +806,10 @@ class Server:
         """Yield record batches from a pyarrow dataset, each cast to
         the Spark-derived wire schema, each bounded by
         ``get_budget_bytes`` on the driver. Rows-per-batch is sized
-        from the files' own uncompressed row width; a batch that still
-        exceeds the budget (even at one row) raises loudly.
+        from the files' own uncompressed row width; that footer figure
+        can under-count Arrow's in-memory width, so a multi-row batch
+        still over the budget is halved into zero-copy slices until
+        each fits. Only a single row past the budget raises loudly.
 
         ``flt``/``columns`` are a PUSHED filter expression / column
         projection (_direct_plan): the filter prunes fragments first —
@@ -886,19 +881,24 @@ class Server:
                     # Spark's order
                     if batch.schema.names != schema.names:
                         batch = batch.select(schema.names)
-                    batch = batch.cast(schema)
-                    stats["batches"] += 1
-                    stats["max_batch_bytes"] = max(
-                        stats["max_batch_bytes"], batch.nbytes
-                    )
-                    if batch.nbytes > budget:
-                        raise ValueError(
-                            f"do_get: a single {batch.num_rows}-row batch is "
-                            f"{batch.nbytes} bytes, past get_budget_bytes="
-                            f"{budget}; raise the budget or select narrower "
-                            "columns"
+                    pending = [batch.cast(schema)]
+                    while pending:
+                        batch = pending.pop()
+                        if batch.nbytes > budget and batch.num_rows > 1:
+                            half = batch.num_rows // 2
+                            pending += [batch.slice(half), batch.slice(0, half)]
+                            continue
+                        if batch.nbytes > budget:
+                            raise ValueError(
+                                f"do_get: a single row is {batch.nbytes} "
+                                f"bytes, past get_budget_bytes={budget}; "
+                                "raise the budget or select narrower columns"
+                            )
+                        stats["batches"] += 1
+                        stats["max_batch_bytes"] = max(
+                            stats["max_batch_bytes"], batch.nbytes
                         )
-                    yield batch
+                        yield batch
         finally:
             if spool is not None:
                 shutil.rmtree(spool, ignore_errors=True)
@@ -1067,80 +1067,60 @@ class Server:
             maxval=k,
             id_col=spec.get("id_col"),
         )
-        if coding is not None and len(targets) > 1:
-            # the batched scale path: one cell equi-join plan for ALL
-            # targets, never a per-target driver loop
+        if len(targets) == 1:
+            out = self.store.search(
+                source, column, targets[0], coding=coding,
+                probes=spec.get("probes"), **common,
+            ).select(F.lit(0).alias("query_index"), "*")
+        else:
+            # batched: ONE plan for all targets, never a per-target
+            # driver loop — a cell equi-join over the index (coded) or
+            # one corpus scan with the query matrix broadcast (brute;
+            # its max_targets cap is the loud bound for absurd query
+            # sets)
             from fenix_spark.operators.index import batch_probe_search
-
-            indexed = self.store.read_table(source, coding=coding, column=column)
-            if common["filter"] is not None:
-                indexed = indexed.where(common["filter"])
-            queries = self.spark.createDataFrame(
-                [(i, t) for i, t in enumerate(targets)],
-                f"__qid bigint, {column} array<double>",
-            )
-            rid = spec.get("id_col") or "vec_id"
-            out = (
-                batch_probe_search(
-                    queries,
-                    indexed,
-                    self.store.read_coder(coding),
-                    column,
-                    metric=metric,
-                    k=k,
-                    probes=int(spec.get("probes") or 8),
-                    query_id="__qid",
-                    right_id=rid,
-                )
-                .withColumnRenamed("query_id", "query_index")
-                # one wire schema across the multi-target branches: the
-                # id column keeps its REAL name, never 'right_id'
-                .withColumnRenamed("right_id", rid)
-            )
-            sel = spec.get("select")
-            if sel:
-                # N×k result rows — joining the selected columns back
-                # is a broadcast join; re-sorted after (joins drop it).
-                # Without this the batched path silently swallowed the
-                # select spec the other two branches honor.
-                out = out.join(indexed.select(rid, *sel), rid).orderBy(
-                    "query_index", "rank"
-                )
-        elif coding is None and len(targets) > 1:
-            # brute multi-target: ONE corpus scan with the query matrix
-            # broadcast (operators.search.batch_knn_brute) — no
-            # per-target plan loop; its max_targets cap stays the loud
-            # bound for absurd query sets (use an index instead)
             from fenix_spark.operators.search import batch_knn_brute
 
-            corpus = self.store.read_table(source)
-            if common["filter"] is not None:
-                corpus = corpus.where(common["filter"])
             rid = spec.get("id_col") or "vec_id"
-            out = batch_knn_brute(
-                corpus, column, targets, metric=metric, k=k, right_id=rid,
-                max_targets=self.exchange_max_targets,
-                chunk_rows=self.exchange_chunk_rows,
+            base = self.store.read_table(
+                source, coding=coding, column=column, filter=common["filter"]
             )
-            sel = spec.get("select")
+            if coding is not None:
+                queries = self.spark.createDataFrame(
+                    [(i, t) for i, t in enumerate(targets)],
+                    f"__qid bigint, {column} array<double>",
+                )
+                out = (
+                    batch_probe_search(
+                        queries,
+                        base,
+                        self.store.read_coder(coding),
+                        column,
+                        metric=metric,
+                        k=k,
+                        probes=int(spec.get("probes") or 8),
+                        query_id="__qid",
+                        right_id=rid,
+                    )
+                    .withColumnRenamed("query_id", "query_index")
+                    # one wire schema across both batched paths: the id
+                    # column keeps its REAL name, never 'right_id'
+                    .withColumnRenamed("right_id", rid)
+                )
+            else:
+                out = batch_knn_brute(
+                    base, column, targets, metric=metric, k=k, right_id=rid,
+                    max_targets=self.exchange_max_targets,
+                    chunk_rows=self.exchange_chunk_rows,
+                )
+            sel = common["select"]
             if sel:
                 # the result is N×k rows — joining the selected columns
-                # back is a broadcast join against one more corpus scan
-                # (re-sorted after: the join drops the rank order)
-                out = out.join(corpus.select(rid, *sel), rid).orderBy(
+                # back is a broadcast join, re-sorted after (joins drop
+                # the rank order)
+                out = out.join(base.select(rid, *sel), rid).orderBy(
                     "query_index", "rank"
                 )
-        else:
-            parts = []
-            for i, t in enumerate(targets):
-                one = self.store.search(
-                    source, column, t, coding=coding,
-                    probes=spec.get("probes"), **common,
-                )
-                parts.append(one.select(F.lit(i).alias("query_index"), "*"))
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
         table = out.toArrow()
         writer.begin(table.schema)
         writer.write_table(table)

@@ -9,9 +9,16 @@ executors, only k·D centroid doubles come back to the driver.
 
 The trained coding is persisted as a PLAIN PARQUET TABLE
 ``{codebook, cell, centroid, metric, codebook_size, num_codebooks}``
-(FIXTURES.md §2) instead of a torch pickle
+(FIXTURES.md §2, ``CODING_SCHEMA``) instead of a torch pickle
 (coder.py:120-125) — readable by Spark, DuckDB, and the oracle, which
 makes code ASSIGNMENT an independently checkable query.
+
+In memory a coding has ONE form, like the reference's in-process
+codebook tensor (coder.py:68-76): a driver-local frame built from an
+Arrow table (``coding_from_numpy`` for a centroid array,
+``read_coding`` for a stored coding directory). Its plan is a
+``LocalTableScan``, so ``coding_to_numpy`` collects it without a Spark
+job.
 
 Joint cell id semantics mirror coder.py:171-181 exactly: with n
 codebooks of k cells, id = Σ_j cell_j · k^(n−1−j) (base-k digits,
@@ -24,8 +31,20 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import DataFrame, Row, SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+CODING_SCHEMA = pa.schema(
+    [
+        ("codebook", pa.int32()),
+        ("cell", pa.int32()),
+        ("centroid", pa.list_(pa.float64())),
+        ("metric", pa.string()),
+        ("codebook_size", pa.int32()),
+        ("num_codebooks", pa.int32()),
+    ]
+)
 
 
 @dataclass(frozen=True)
@@ -57,16 +76,18 @@ def train_coding(
     assignment and probe scoring, matching the reference's behavior of
     carrying ``metric`` in the coding config (coder.py:24-29).
     """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
+    from concurrent.futures import ThreadPoolExecutor
 
-    spark = df.sparkSession
+    from pyspark.ml.clustering import KMeans
+    from pyspark.ml.functions import array_to_vector
+
     if dim is None:
         dim = len(df.select(column).head()[0])
     n, k = config.num_codebooks, config.codebook_size
     if dim % n:
         raise ValueError(f"dim {dim} not divisible by num_codebooks {n}")
     sub_dim = dim // n
+    cents = np.zeros((n, k, sub_dim))
 
     slices = df.select(
         *[array_to_vector(sub_vector(column, j, sub_dim)).alias(f"sub{j}") for j in range(n)]
@@ -76,7 +97,7 @@ def train_coding(
         # stored blocks instead of racing to compute the projection
         slices.count()
 
-        def fit_one(j: int) -> list[Row]:
+        def fit_one(j: int) -> None:
             km = KMeans(
                 k=k,
                 seed=config.seed + j,
@@ -88,89 +109,48 @@ def train_coding(
             # Stable cell numbering: the reference's cell order is an
             # artifact of torch init; ours sorts centroids
             # lexicographically so retraining is reproducible.
-            cents = sorted(
-                (np.asarray(c).tolist() for c in model.clusterCenters()),
-                key=lambda c: tuple(c),
-            )
-            return [
-                Row(
-                    codebook=j,
-                    cell=i,
-                    centroid=[float(x) for x in c],
-                    metric=config.metric,
-                    codebook_size=k,
-                    num_codebooks=n,
-                )
-                for i, c in enumerate(cents)
-            ]
+            found = sorted(tuple(c) for c in model.clusterCenters())
+            cents[j, : len(found)] = found
 
         # The n per-codebook fits are INDEPENDENT jobs over the same
         # cached slices — run them concurrently so each fit's stragglers
         # back-fill with the next fit's tasks (guide §2.6). Each fit is
         # seeded and its centroids sorted, so results are byte-identical
-        # to the sequential order; rows are assembled in codebook order.
-        from concurrent.futures import ThreadPoolExecutor
-
-        rows: list[Row] = []
+        # to the sequential order.
         with ThreadPoolExecutor(max_workers=min(n, 4)) as pool:
-            for part in pool.map(fit_one, range(n)):
-                rows.extend(part)
-        _ = vector_to_array  # imported for parity; slices hold vectors
-        return spark.createDataFrame(
-            rows,
-            "codebook int, cell int, centroid array<double>, "
-            "metric string, codebook_size int, num_codebooks int",
-        )
+            list(pool.map(fit_one, range(n)))
     finally:
         slices.unpersist()
+    return coding_from_numpy(df.sparkSession, cents, config.metric)
 
 
-_CODING_MEMO: "weakref.WeakKeyDictionary" = None  # type: ignore[assignment]
+def coding_from_numpy(spark: SparkSession, cents: np.ndarray, metric: str) -> DataFrame:
+    """The coding frame of an (n, k, sub_dim) centroid array: one row
+    per (codebook, cell), built from an Arrow table on the driver, so
+    its plan is a ``LocalTableScan`` and collecting it runs no Spark
+    job. Inverse of ``coding_to_numpy``."""
+    n, k, _ = cents.shape
+    table = pa.table(
+        [
+            np.repeat(np.arange(n, dtype="int32"), k),
+            np.tile(np.arange(k, dtype="int32"), n),
+            list(np.asarray(cents, dtype="float64").reshape(n * k, -1)),
+            [metric] * (n * k),
+            np.full(n * k, k, dtype="int32"),
+            np.full(n * k, n, dtype="int32"),
+        ],
+        schema=CODING_SCHEMA,
+    )
+    return spark.createDataFrame(table)
 
 
-def _local_scan_rows(df: DataFrame):
-    """Rows of ``df`` read driver-locally with pyarrow when — and only
-    when — it is a bare parquet scan over local files. Codebook tables
-    are a handful of rows, but ``collect()`` still pays a full Spark
-    job (~0.1-0.3 s of scheduling); a driver-side footer+page read of
-    the same files is ~ms and reads the identical bytes. Every
-    invocation still reads the parquet inputs — this changes WHO reads
-    the file, never WHEN (no cross-invocation caching; the weak
-    per-instance memo above is unchanged). Returns None for anything
-    that is not a plain local parquet scan — non-parquet sources,
-    percent-encoded paths pyarrow can't open, and HIVE-PARTITIONED
-    layouts (whose partition columns live in directory names, not the
-    leaf files — the column check below catches them) all fall back to
-    collect()."""
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() != "LogicalRelation":
-            return None
-        files = df.inputFiles()
-        if not files or not all(f.startswith("file:") for f in files):
-            return None
-        from urllib.parse import unquote
+def read_coding(spark: SparkSession, path: str) -> DataFrame:
+    """A stored coding directory as a driver-local frame (plan:
+    ``LocalTableScan``). The coding is n·k rows, so pyarrow reads the
+    parquet files on the driver and no Spark job lists or scans them."""
+    import pyarrow.parquet as pq
 
-        import pyarrow.parquet as pq
-
-        paths = [unquote(f[len("file:"):]) for f in files]
-        tables = [pq.read_table(p) for p in sorted(paths)]
-        # EVERY file must contain EVERY DataFrame column (intersection,
-        # not union — ADVICE r13): a partition-directory column is
-        # absent from all leaf files, and a schema-EVOLVED dir (an older
-        # file missing a newer column, readable via mergeSchema) would
-        # pass a union check yet yield rows without the key where
-        # collect() yields None — callers would KeyError instead of
-        # falling back.
-        cols = set.intersection(*(set(t.column_names) for t in tables))
-        if not set(df.columns) <= cols:
-            return None
-    except Exception:  # noqa: BLE001 — any fast-path failure: collect() instead
-        return None
-    out = []
-    for t in tables:
-        out.extend(t.to_pylist())
-    return out or None
+    return spark.createDataFrame(pq.read_table(path))
 
 
 def coding_to_numpy(coding: DataFrame) -> tuple[np.ndarray, str, int, int]:
@@ -178,26 +158,11 @@ def coding_to_numpy(coding: DataFrame) -> tuple[np.ndarray, str, int, int]:
     (metric, k, n). Codebooks are tiny by design (n·k rows) — this is
     the one intentional driver-side materialization, same as the
     reference loading the codebook into process memory (coder.py:68-76).
-
-    Memoized per DataFrame INSTANCE (weak-keyed): a DataFrame's
-    content is fixed by its plan, and callers (assign/rank/lut) hit
-    the same coding object several times per query — e.g. the 3-arm
-    ivfpq suite row — so each tiny collect job runs once, not ~10×.
+    Codings from ``train_coding``, ``coding_from_numpy`` and
+    ``read_coding`` are driver-local frames, so the collect runs no
+    Spark job; any other coding frame is collected like any frame.
     """
-    global _CODING_MEMO
-    import weakref
-
-    if _CODING_MEMO is None:
-        _CODING_MEMO = weakref.WeakKeyDictionary()
-    try:
-        hit = _CODING_MEMO.get(coding)
-    except TypeError:  # unhashable/unweakrefable frame impl: no memo
-        hit = None
-    if hit is not None:
-        return hit
-    rows = _local_scan_rows(coding)
-    if rows is None:
-        rows = coding.collect()
+    rows = coding.collect()
     metric = rows[0]["metric"]
     k = rows[0]["codebook_size"]
     n = rows[0]["num_codebooks"]
@@ -205,12 +170,7 @@ def coding_to_numpy(coding: DataFrame) -> tuple[np.ndarray, str, int, int]:
     cents = np.zeros((n, k, sub_dim), dtype="float64")
     for r in rows:
         cents[r["codebook"], r["cell"]] = r["centroid"]
-    out = (cents, metric, k, n)
-    try:
-        _CODING_MEMO[coding] = out
-    except TypeError:  # unhashable/unweakrefable frame impl: just skip
-        pass
-    return out
+    return cents, metric, k, n
 
 
 def numpy_metric(metric: str, mat: np.ndarray, target: np.ndarray) -> np.ndarray:

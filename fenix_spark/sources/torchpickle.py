@@ -280,24 +280,17 @@ def import_reference_coding(spark, torch_path: str, out_path: str):
     """Convert a reference ``.torch`` coding into this engine's coding
     table (schema of ``coder.train_coding``: one row per (codebook,
     cell) with the centroid sub-vector) and write it at ``out_path``.
-    Returns the coding DataFrame — directly usable by ``assign_codes``
-    / ``probe_*`` / ``build_index``, no retrain."""
+    Returns the coding as a driver-local frame
+    (``coder.coding_from_numpy``) — directly usable by
+    ``assign_codes`` / ``probe_*`` / ``build_index``, no retrain."""
+    from fenix_spark.operators.coder import coding_from_numpy
+
     d = load_reference_coding(torch_path)
-    tensor, cfg = d["tensor"].astype(np.float64), d["config"]
-    n, k = int(cfg["num_codebooks"]), int(cfg["codebook_size"])
-    metric = str(cfg.get("metric", "l2"))
-    rows = [
-        (j, c, tensor[j, c].tolist(), metric, k, n)
-        for j in range(n)
-        for c in range(k)
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "codebook int, cell int, centroid array<double>, "
-        "metric string, codebook_size int, num_codebooks int",
+    df = coding_from_numpy(
+        spark, d["tensor"].astype(np.float64), str(d["config"].get("metric", "l2"))
     )
     df.coalesce(1).write.mode("overwrite").parquet(out_path)
-    return spark.read.parquet(out_path)
+    return df
 
 
 # ------------------------------------------------------------------
@@ -459,9 +452,9 @@ def export_reference_coding(
     not data."""
     import pyarrow as pa
 
-    rows = coding.select(
-        "codebook", "cell", "centroid", "metric", "codebook_size", "num_codebooks"
-    ).collect()
+    from fenix_spark.operators.coder import CODING_SCHEMA
+
+    rows = coding.select(*CODING_SCHEMA.names).collect()
     if not rows:
         raise ValueError("export_reference_coding: empty coding table")
     n = int(rows[0]["num_codebooks"])

@@ -37,7 +37,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 
 from fenix_spark import catalog
-from fenix_spark.operators.coder import CodingConfig, train_coding
+from fenix_spark.operators.coder import CodingConfig, read_coding, train_coding
 
 
 class Store:
@@ -126,7 +126,9 @@ class Store:
         )
 
     def read_coder(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(catalog.coding_path(self.root, name))
+        """The named coding as a driver-local frame (coder.read_coding):
+        reading it and collecting it run no Spark job."""
+        return read_coding(self.spark, catalog.coding_path(self.root, name))
 
     def list_coders(self) -> list[str]:
         base = os.path.join(self.root, "codings")

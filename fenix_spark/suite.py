@@ -1569,8 +1569,9 @@ FROM h GROUP BY content_hash
 
 
 def _text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # retired from the oracle suite in r6 (subsumed by text_metrics);
-    # kept because tests/test_plans.py pins its column-pruning contract
+    # retired from the oracle suite in r6 (its grouped count/avg shape
+    # stays hash-checked by tpch_q1); kept because tests/test_plans.py
+    # pins its column-pruning contract
     docs = table(spark, sf_dir, "documents")
     return docs.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -2118,54 +2119,6 @@ def _winnow_fingerprint_sql() -> str:
     """
 
 
-def _ngram_jaccard_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """N-gram Jaccard similarity search: for each of 20 probe docs, the
-    top-3 most similar other docs by word-bigram Jaccard. The probe
-    side broadcasts; the full side streams — at 100 TB this is one scan
-    plus a window top-k partitioned by probe."""
-    from fenix_spark.operators.dedup import jaccard, token_sets
-
-    sets = token_sets(table(spark, sf_dir, "documents"), "text", "doc_id", shingle=2)
-    probes = sets.select(
-        F.col("id").alias("probe_id"), F.col("s").alias("probe_s")
-    ).where(F.col("probe_id") < 20)
-    pairs = (
-        sets.crossJoin(F.broadcast(probes))
-        .where(F.col("id") != F.col("probe_id"))
-        .select(
-            "probe_id",
-            F.col("id").alias("doc_id"),
-            F.round(jaccard(F.col("probe_s"), F.col("s")), 6).alias("jac"),
-        )
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.col("jac").desc(), F.col("doc_id").asc())
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 3)
-    )
-
-
-def _ngram_jaccard_topk_sql() -> str:
-    from fenix_spark.functions.texthash import duck_tokens, duck_word_shingles
-
-    return f"""
-    WITH toks AS (
-        SELECT doc_id, {duck_tokens("text")} AS tk FROM documents
-    ), sets AS (
-        SELECT doc_id, list_distinct({duck_word_shingles("tk", 2)}) AS s FROM toks
-    ), pairs AS (
-        SELECT p.doc_id AS probe_id, d.doc_id AS doc_id,
-               round(len(list_intersect(p.s, d.s))::DOUBLE
-                     / (len(p.s) + len(d.s) - len(list_intersect(p.s, d.s))), 6) AS jac
-        FROM sets p JOIN sets d ON p.doc_id < 20 AND d.doc_id != p.doc_id
-    )
-    SELECT probe_id, doc_id, jac, CAST(rank AS INTEGER) AS rank FROM (
-        SELECT *, row_number() OVER (PARTITION BY probe_id ORDER BY jac DESC, doc_id ASC) AS rank
-        FROM pairs
-    ) WHERE rank <= 3
-    """
-
-
 def _embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup: each vector's nearest OTHER neighbor
     if within cosine distance 0.3 — the BLAS similarity join with
@@ -2198,46 +2151,6 @@ WITH pairs AS (
     SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY dist, nn_id) AS rn FROM pairs
 )
 SELECT vec_id, nn_id, dist FROM r WHERE rn = 1 AND dist <= 0.3
-"""
-
-
-def _argmax_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Argmax-per-group via aggregate + join-back (the classic
-    alternative to a window when groups are huge: the per-group max is
-    a partial-aggregating shuffle of ONE value per group, then a
-    broadcast semi-style join recovers the full row — no full-table
-    window sort)."""
-    cust = table(spark, sf_dir, "customer")
-    best = (
-        cust.groupBy("c_nationkey")
-        .agg(F.max("c_acctbal").alias("best_bal"))
-        .withColumnRenamed("c_nationkey", "bk")  # disambiguate the self-join lineage
-    )
-    nation = table(spark, sf_dir, "nation")
-    return (
-        cust.join(
-            F.broadcast(best),
-            (cust.c_nationkey == F.col("bk")) & (cust.c_acctbal == F.col("best_bal")),
-        )
-        .drop("bk")
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .groupBy("n_name")
-        .agg(
-            F.min("c_custkey").alias("best_custkey"),  # dedupe acctbal ties
-            F.round(F.max("best_bal"), 2).alias("best_bal"),
-        )
-    )
-
-
-_ARGMAX_PER_GROUP_SQL = """
-WITH best AS (
-    SELECT c_nationkey, max(c_acctbal) AS best_bal FROM customer GROUP BY c_nationkey
-)
-SELECT n_name, min(c_custkey) AS best_custkey, round(max(best_bal), 2) AS best_bal
-FROM customer
-JOIN best ON customer.c_nationkey = best.c_nationkey AND c_acctbal = best_bal
-JOIN nation ON customer.c_nationkey = n_nationkey
-GROUP BY n_name
 """
 
 
@@ -2605,45 +2518,6 @@ active AS (
 SELECT a.cohort_ms, a.age, a.active_users, s.active_users AS cohort_size,
        round(a.active_users / s.active_users, 6) + 0.0 AS retention
 FROM active a JOIN active s ON a.cohort_ms = s.cohort_ms AND s.age = 0
-"""
-
-
-_ROLLUP_GRAINS_MS = {"hour": 3_600_000, "day": 86_400_000, "week": 604_800_000}
-
-
-def _time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hypertable-style multi-granularity rollup: each event lands in
-    its hour/day/week buckets via a literal-grain explode (3× map-side
-    replication), then ONE hash aggregate over (grain, bucket, type) —
-    one shuffle for all granularities, versus one scan + shuffle per
-    grain with union-of-groupbys."""
-    ev = events_table(spark, sf_dir)
-    grains = F.array(
-        *[
-            F.struct(F.lit(g).alias("grain"), F.lit(ms).alias("ms"))
-            for g, ms in _ROLLUP_GRAINS_MS.items()
-        ]
-    )
-    return (
-        ev.select(
-            "event_type", "value", "ts_ms", F.explode(grains).alias("g")
-        )
-        .groupBy(
-            F.col("g.grain").alias("grain"),
-            ((F.col("ts_ms") / F.col("g.ms")).cast("bigint") * F.col("g.ms")).alias("bucket_ms"),
-            "event_type",
-        )
-        .agg(F.count(F.lit(1)).alias("n_events"), F.round(F.sum("value"), 4).alias("sum_value"))
-    )
-
-
-_TIME_ROLLUP_SQL = f"""
-WITH g(grain, ms) AS (VALUES {", ".join(f"('{g}', {ms})" for g, ms in _ROLLUP_GRAINS_MS.items())}),
-e AS (SELECT event_type, value, epoch_ms(ts) AS ts_ms FROM events)
-SELECT grain, (ts_ms // ms) * ms AS bucket_ms, event_type,
-       count(*) AS n_events, round(sum(value), 4) AS sum_value
-FROM e, g
-GROUP BY grain, bucket_ms, event_type
 """
 
 
@@ -3350,52 +3224,6 @@ def _repetition_metrics_sql() -> str:
     return duckdb_repetition_sql("documents")
 
 
-def _text_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document text analysis in ONE scan: whitespace + BPE-ish
-    token counts, quality score (length/punct/stopword ratios), and
-    marker-word language ID (textstats.LANG_MARKERS) — all native
-    Catalyst expressions, no Python, no shuffle; the four metrics cost
-    one pass over the text column at any scale."""
-    from fenix_spark.functions.textstats import (
-        bpe_token_count,
-        lang_id,
-        quality_score,
-        ws_token_count,
-    )
-    from fenix_spark.operators.dedup import spread
-
-    # spread: regex-heavy per-row expressions over a one-file input
-    # would otherwise run in a single task (dedup.spread docstring)
-    docs = spread(table(spark, sf_dir, "documents"))
-    return docs.select(
-        "doc_id",
-        ws_token_count(F.col("text")).alias("ws_tokens"),
-        bpe_token_count(F.col("text")).alias("bpe_tokens"),
-        quality_score(F.col("text")).alias("quality"),
-        lang_id(F.col("text")).alias("pred_lang"),
-    )
-
-
-def _text_metrics_sql() -> str:
-    from fenix_spark.functions.texthash import duck_tokens
-    from fenix_spark.functions.textstats import (
-        duck_bpe_token_count,
-        duck_lang_id,
-        duck_quality_score,
-        duck_ws_token_count,
-    )
-
-    return f"""
-    WITH t AS (SELECT doc_id, text, {duck_tokens("text")} AS tk FROM documents)
-    SELECT doc_id,
-           CAST({duck_ws_token_count("text")} AS INTEGER) AS ws_tokens,
-           CAST({duck_bpe_token_count("text")} AS INTEGER) AS bpe_tokens,
-           {duck_quality_score("text", "tk")} AS quality,
-           {duck_lang_id("tk")} AS pred_lang
-    FROM t
-    """
-
-
 # --------------------------------------------------------------------------
 # Registry
 # --------------------------------------------------------------------------
@@ -3448,8 +3276,8 @@ SPARK_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "dedup_keep_list": _dedup_keep_list,
     # -- text analysis / curation --
     # (text_stats retired for dedup_keep_list, VERDICT r05 #3 — its
-    #  aggregate patterns are subsumed by text_metrics; text_metrics
-    #  retired for repetition_metrics, r12 (rotation #8, done ahead of
+    #  grouped count/avg shape stays hash-checked by tpch_q1 and
+    #  curation_stats; text_metrics retired for repetition_metrics, r12 (rotation #8, done ahead of
     #  the r13 schedule since the staged mirror was already
     #  row-identical on the driver corpus) — its scan-local per-doc
     #  counting shape is EXACTLY what the repetition row exercises,
@@ -3518,8 +3346,8 @@ SPARK_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     #  tests/test_priority_sample.py::test_duckdb_mirror_state_and_take.)
     "epoch_sample": _epoch_sample_docs,
     # (moving_avg retired for gapfill_timeseries, r8 — its sliding
-    #  ROWS frame stays covered by time_rollup's buckets + sessionize's
-    #  ordered windows; gapfill is a whole operator family (dense-grid
+    #  ROWS frame stays covered by sessionize's running-sum frame and
+    #  gapfill_timeseries' locf frame; gapfill is a whole operator family (dense-grid
     #  materialization + locf) that deserved an oracle row.)
     # (group_topn retired for markov_transitions, r13 — rotation #10,
     #  mirror staged row-identical at sf0.001+sf0.01 BEFORE promotion
@@ -3547,8 +3375,8 @@ SPARK_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # (regex_extract_ids retired for readability_scores under the
     #  50-row cap, r11 — its scalar-regex/cast surface is exercised far
     #  more deeply by readability_scores' guarded sentence split +
-    #  higher-order syllable aggregate, and regexp_extract itself stays
-    #  oracle-covered in events_json + text_metrics.)
+    #  higher-order syllable aggregate; regexp_extract itself has no
+    #  oracle row left.)
     "readability_scores": _readability_scores,
     "decontamination": _decontamination,
     "nested_access": _nested_access,

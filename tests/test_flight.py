@@ -620,6 +620,19 @@ def test_pinned_tickets_reject_foreign_files_and_filters(served, sharded):
         client.conn.do_get(fl.Ticket(json.dumps(spec).encode())).read_all()
 
 
+def test_pinned_ticket_with_malformed_files_is_rejected(served, sharded):
+    """A ticket whose ``files`` is not a non-empty list of path strings
+    is refused, never served as an unpinned whole-table read."""
+    _, client, _ = served
+    for files in (None, [], "part-00000.parquet", [0]):
+        for extra in ({}, {"filter": "k > 5"}):
+            ticket = json.dumps({"source": "sharded", "files": files, **extra})
+            with pytest.raises(
+                (fl.FlightServerError, pa.lib.ArrowInvalid), match="'files' must be"
+            ):
+                client.conn.do_get(fl.Ticket(ticket.encode())).read_all()
+
+
 def test_validate_verb_serves_the_fsck_report(served):
     """Extension verb: remote store fsck — the validate_store report
     over the wire, zero Spark jobs server-side."""

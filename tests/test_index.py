@@ -26,7 +26,7 @@ K, N = 8, 2
 def coding(embeddings):
     return train_coding(
         embeddings, "embedding", CodingConfig(metric="l2", codebook_size=K, num_codebooks=N)
-    ).cache()
+    )
 
 
 @pytest.fixture(scope="module")
@@ -619,44 +619,57 @@ class TestFilteredProbeSearch:
         assert len(boosted) == 10
 
 
-def test_local_scan_rows_fallbacks(spark, tmp_path):
-    """_local_scan_rows (r13: driver-local pyarrow fast path for bare
-    parquet scans) must refuse — returning None so callers collect() —
-    exactly the shapes it cannot read faithfully: hive-partitioned
-    layouts (partition columns live in directory names, not leaf
-    files), non-parquet sources, and transformed plans; and it must
-    agree with collect() on the plain-scan case."""
-    from fenix_spark.operators.coder import _local_scan_rows
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
 
-    plain = str(tmp_path / "plain.parquet")
-    spark.range(6).selectExpr("id", "id % 2 AS codebook").write.parquet(plain)
-    df = spark.read.parquet(plain)
-    rows = _local_scan_rows(df)
-    assert rows is not None
-    assert sorted((r["id"], r["codebook"]) for r in rows) == sorted(
-        (r["id"], r["codebook"]) for r in df.collect()
+
+def test_read_coding_rows_equal_spark_scan(spark, embeddings, tmp_path):
+    """The driver-local coding reader returns exactly the rows a Spark
+    parquet scan of the same directory collects, as a
+    ``LocalTableScan`` frame, for three writers: ``Store.make_coder``,
+    ``import_reference_coding`` and the committed sf0.01 artifact."""
+    from fenix_spark import artifacts, catalog
+    from fenix_spark.operators.coder import read_coding
+    from fenix_spark.sources.torchpickle import (
+        export_reference_coding,
+        import_reference_coding,
     )
+    from fenix_spark.store import Store
 
-    part = str(tmp_path / "part.parquet")
-    spark.range(6).selectExpr("id", "id % 2 AS codebook").write.partitionBy(
-        "codebook"
-    ).parquet(part)
-    assert _local_scan_rows(spark.read.parquet(part)) is None  # partition col
+    store = Store(spark, str(tmp_path / "store"))
+    store.make_table("emb", embeddings)
+    store.make_coder("pq", "emb", "embedding", CodingConfig(codebook_size=4, num_codebooks=2))
+    export_reference_coding(store.read_coder("pq"), str(tmp_path / "pq.torch"))
+    imported = import_reference_coding(spark, str(tmp_path / "pq.torch"), str(tmp_path / "imp"))
+    assert "LocalTableScan" in _plan(imported)
+    paths = [
+        catalog.coding_path(store.root, "pq"),
+        str(tmp_path / "imp"),
+        artifacts.coding_path("sf0.01"),
+    ]
+    for path in paths:
+        local = read_coding(spark, path)
+        assert "LocalTableScan" in _plan(local)
+        want = spark.read.parquet(path).collect()
+        assert len(want) in (8, 16)
+        assert sorted(local.collect()) == sorted(want)
 
-    js = str(tmp_path / "rows.json")
-    spark.range(3).write.json(js)
-    assert _local_scan_rows(spark.read.json(js)) is None  # not parquet
 
-    # schema-evolved dir: an older file lacks a newer column — the fast
-    # path must refuse (collect() yields None for the missing column;
-    # pyarrow rows from the old file would simply LACK the key)
-    ev = str(tmp_path / "evolved.parquet")
-    spark.range(3).selectExpr("id").write.parquet(ev)
-    spark.range(3, 6).selectExpr("id", "id * 2 AS extra").write.mode(
-        "append"
-    ).parquet(ev)
-    evolved = spark.read.option("mergeSchema", "true").parquet(ev)
-    assert set(evolved.columns) == {"id", "extra"}
-    assert _local_scan_rows(evolved) is None
+def test_codings_are_driver_local(coding):
+    """``train_coding`` returns an Arrow-built local frame."""
+    assert "LocalTableScan" in _plan(coding)
 
-    assert _local_scan_rows(df.where("id > 1")) is None  # not a bare scan
+
+def test_artifact_codings_are_driver_local(spark):
+    from conftest import SF01_DIR
+
+    from fenix_spark import artifacts
+
+    codings = [
+        artifacts.ensure_artifacts(spark, SF01_DIR)[0],
+        *artifacts.ensure_ivfpq_artifacts(spark, SF01_DIR)[:2],
+        *artifacts.ensure_ivfpq_residual_artifacts(spark, SF01_DIR)[:2],
+        artifacts.ensure_large_flat_index(spark, SF01_DIR)[0],
+    ]
+    for c in codings:
+        assert "LocalTableScan" in _plan(c)
