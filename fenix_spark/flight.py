@@ -527,7 +527,7 @@ class Server:
         index layouts are rewritten in place, so they carry no
         manifest generation (gen None)."""
         from fenix_spark.catalog import index_path, source_path
-        from fenix_spark.manifest import current_gen, resolve
+        from fenix_spark.manifest import _resolve_gen
 
         if coding is not None:
             if column is None or not isinstance(source, str):
@@ -535,9 +535,7 @@ class Server:
             d = index_path(self.store.root, source, column, coding)
             gen = None
         else:
-            path = source_path(self.store.root, source)
-            d = resolve(path)
-            gen = current_gen(path)
+            gen, d = _resolve_gen(source_path(self.store.root, source))
         if not os.path.isdir(d):
             return None
         walk = _hive_walk(d)

@@ -35,11 +35,16 @@ def vec_double(vec: Column | str) -> Column:
 
 
 def sql_double(v: float) -> str:
-    """SQL double literal for a FINITE value: shortest-round-trip repr
-    + D suffix, parsed by Java's correctly-rounded parser to the same
-    IEEE bit pattern (pinned in test_metrics). ONE definition for every
+    """SQL double for ``v``: shortest-round-trip repr + D suffix, parsed
+    by Java's correctly-rounded parser to the same IEEE bit pattern
+    (pinned in test_metrics); NaN and ±infinity, which have no literal
+    form, as casts of their names. ONE definition for every
     SQL-rendering fast path."""
-    return repr(float(v)) + "D"
+    v = float(v)
+    if math.isfinite(v):
+        return repr(v) + "D"
+    name = "NaN" if math.isnan(v) else ("Infinity" if v > 0 else "-Infinity")
+    return f"CAST('{name}' AS DOUBLE)"
 
 
 def lit_double_array(values: Sequence[float]) -> Column:

@@ -1,7 +1,5 @@
 """Text-analysis functions for LLM-pipeline curation: token counting,
-quality scoring, language-ID. Each helper has a Spark Column form and a
-mirrored DuckDB SQL builder producing identical values (same contract
-as texthash.py), so the suite queries built on them hash-match.
+quality scoring, language-ID, as Spark Column expressions.
 
 Scale notes: everything here is a per-row scalar expression — native
 Catalyst (regexp/aggregate/transform), whole-stage-codegen'd, no
@@ -31,9 +29,6 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 STOPWORDS: tuple[str, ...] = tuple(
     sorted({w for ws in LANG_MARKERS.values() for w in ws})
 )
-
-
-# -- Spark side ------------------------------------------------------------
 
 
 def ws_token_count(c: Column) -> Column:
@@ -105,15 +100,6 @@ def quality_score(text: Column) -> Column:
     return F.round(let(tokens(text), body), 6)
 
 
-def lang_scores(toks: Column) -> list[tuple[str, Column]]:
-    dt = F.array_distinct(toks)
-    out = []
-    for lang, markers in sorted(LANG_MARKERS.items()):
-        mk = F.array(*[F.lit(w) for w in markers])
-        out.append((lang, F.size(F.array_intersect(dt, mk))))
-    return out
-
-
 def lang_id(text: Column) -> Column:
     """Argmax language by marker-word overlap, alphabetical tiebreak.
 
@@ -149,68 +135,3 @@ def lang_id(text: Column) -> Column:
 
     return let(F.array_distinct(tokens(text)), body)
 
-
-# -- DuckDB side -----------------------------------------------------------
-
-
-def _duck_list_lit(words: tuple[str, ...]) -> str:
-    return "[" + ", ".join(f"'{w}'" for w in words) + "]"
-
-
-def duck_ws_token_count(e: str) -> str:
-    return (
-        f"CASE WHEN trim({e}) = '' THEN 0 "
-        f"ELSE len(regexp_split_to_array(trim({e}), '\\s+')) END"
-    )
-
-
-def duck_bpe_token_count(e: str) -> str:
-    return f"len(regexp_extract_all({e}, '{BPE_TOKEN_RE}'))"
-
-
-def duck_alpha_ratio(e: str) -> str:
-    return f"(length(regexp_replace({e}, '[^a-zA-Z]', '', 'g'))::DOUBLE / greatest(length({e}), 1))"
-
-
-def duck_punct_ratio(e: str) -> str:
-    return f"(length(regexp_replace({e}, '[a-zA-Z0-9\\s]', '', 'g'))::DOUBLE / greatest(length({e}), 1))"
-
-
-def duck_stopword_ratio(toks: str) -> str:
-    sw = _duck_list_lit(STOPWORDS)
-    return (
-        f"(len(list_intersect(list_distinct({toks}), {sw}))::DOUBLE"
-        f" / greatest(len(list_distinct({toks})), 1))"
-    )
-
-
-def duck_mean_token_len(toks: str) -> str:
-    return (
-        f"(list_sum(list_transform({toks}, t -> length(t)))::DOUBLE"
-        f" / greatest(len({toks}), 1))"
-    )
-
-
-def duck_quality_score(text: str, toks: str) -> str:
-    wl = duck_mean_token_len(toks)
-    wl_term = f"(1.0 - least(abs({wl} - 5.0) / 5.0, 1.0))"
-    return (
-        f"round(0.4 * {duck_alpha_ratio(text)}"
-        f" + 0.3 * {wl_term}"
-        f" + 0.2 * least({duck_stopword_ratio(toks)} * 4.0, 1.0)"
-        f" + 0.1 * (1.0 - least({duck_punct_ratio(text)} * 5.0, 1.0)), 6)"
-    )
-
-
-def duck_lang_id(toks: str) -> str:
-    """Same fold as lang_id: later languages win only on strictly
-    greater score; alphabetical iteration ⇒ alphabetical tiebreak."""
-    expr_lang, expr_score = None, None
-    for lang, markers in sorted(LANG_MARKERS.items()):
-        score = f"len(list_intersect(list_distinct({toks}), {_duck_list_lit(markers)}))"
-        if expr_lang is None:
-            expr_lang, expr_score = f"'{lang}'", score
-        else:
-            expr_lang = f"(CASE WHEN {score} > {expr_score} THEN '{lang}' ELSE {expr_lang} END)"
-            expr_score = f"greatest({score}, {expr_score})"
-    return expr_lang

@@ -105,15 +105,22 @@ def resolve(path: str) -> str:
     is unreachable through this module's protocol (vacuum never
     deletes the committed generation), so it means external damage,
     not a torn commit."""
+    return _resolve_gen(path)[1]
+
+
+def _resolve_gen(path: str) -> tuple[int | None, str]:
+    """(committed gen or None, directory to scan) from ONE pointer
+    read, so a commit landing between two reads cannot pair one
+    generation's id with another's directory."""
     gen = current_gen(path)
     if gen is None:
-        return path
+        return None, path
     d = _gen_dir(path, gen)
     if not os.path.isdir(d):
         raise FileNotFoundError(
             f"manifest at {path} names generation {gen} but {d} is missing"
         )
-    return d
+    return gen, d
 
 
 def begin(path: str) -> tuple[int, str]:

@@ -19,11 +19,11 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from fenix_spark.functions.metrics import (
+    METRICS,
     distance,
     lit_double_array,
     query_literal,
@@ -46,9 +46,12 @@ def assign_code_expr(column: str, coding: DataFrame, metric: str | None = None) 
     then compose base-k digits: id = Σ_j cell_j · k^(n−1−j)
     (reference semantics, coder.py:171-181; top-1 at index.py:48-49).
     """
-    cents, coding_metric, k, n = coding_to_numpy(coding)
-    metric = metric or coding_metric
-    sub_dim = cents.shape[2]
+    cents, coding_metric, _k, _n = coding_to_numpy(coding)
+    return _code_from_cents(column, cents, metric or coding_metric)
+
+
+def _code_from_cents(column: str, cents, metric: str) -> Column:
+    n, k, sub_dim = cents.shape
     joint = F.lit(0).cast("bigint")
     for j in range(n):
         sub = sub_vector(column, j, sub_dim)
@@ -119,14 +122,27 @@ def probe_search(
     cells, matching reference behavior (index.py:113-126)."""
     _, coding_metric, kk, n = coding_to_numpy(coding)
     metric = metric or coding_metric
-    pred = filter
-    if probes is not None and probes < kk**n:
-        cells = rank_cells(coding, target, metric, limit=probes)
-        cell_pred = F.col(CODE_COL).isin(cells)
-        pred = cell_pred if pred is None else (cell_pred & pred)
+    probed = _probed(indexed, coding, target, metric, probes, kk**n)
     return knn(
-        indexed, column, target, metric=metric, k=k, filter=pred, select=select, id_col=id_col
+        probed, column, target, metric=metric, k=k, filter=filter, select=select, id_col=id_col
     )
+
+
+def _probed(
+    indexed: DataFrame,
+    coding: DataFrame,
+    target: Sequence[float],
+    metric: str,
+    probes: int | None,
+    cells: int,
+) -> DataFrame:
+    """``indexed`` restricted to ``__CODED_ID__ IN`` the top-``probes``
+    of the coding's ``cells`` joint cells for ``target`` — a filter on
+    the partition column, so the scan prunes whole cell directories.
+    ``probes=None`` or ≥ ``cells`` keeps every row; ``probes=0`` none."""
+    if probes is None or probes >= cells:
+        return indexed
+    return indexed.where(F.col(CODE_COL).isin(rank_cells(coding, target, metric, limit=probes)))
 
 
 def probe_cells_expr(column: str, coding: DataFrame, probes: int, metric: str | None = None) -> Column:
@@ -153,27 +169,33 @@ def probe_cells_expr(column: str, coding: DataFrame, probes: int, metric: str | 
 _MAX_ENUMERATED_CELLS = 4096
 
 
-def _sql_distance(metric: str, u: str, v: str) -> str | None:
+def _sql_distance(metric: str, u: str, v: str) -> str:
     """SQL text for ``functions.metrics.distance`` over array<double>
-    operands — the same fold shapes (zip_with + left-fold aggregate),
-    so values are bit-identical to the Column-built form. Returns None
-    for metrics without a rendering (callers fall back to Columns)."""
-    dot = f"aggregate(zip_with({u}, {v}, (a, b) -> a * b), 0.0D, (acc, x) -> acc + x)"
+    operands — the same fold shapes (zip_with + left-fold aggregate)
+    and operator trees, so values are bit-identical to the Column-built
+    form."""
+
+    def dot(p: str, q: str) -> str:
+        return f"aggregate(zip_with({p}, {q}, (a, b) -> a * b), 0.0D, (acc, x) -> acc + x)"
+
     if metric in ("l2", "euclidean"):
         return (
             f"sqrt(aggregate(zip_with({u}, {v}, (a, b) -> (a - b) * (a - b)), "
             "0.0D, (acc, x) -> acc + x))"
         )
+    if metric == "cosine":
+        return (
+            f"(0.5D - ((0.5D * {dot(u, v)}) / "
+            f"(sqrt({dot(u, u)}) * sqrt({dot(v, v)}))))"
+        )
     if metric in ("dot", "inner_product"):
-        return f"-({dot})"
-    return None
+        return f"-({dot(u, v)})"
+    raise ValueError(f"unknown metric {metric!r}; expected one of {METRICS}")
 
 
 def _probe_cells_from_cents(
     column: str, cents, k: int, n: int, probes: int, metric: str
 ) -> Column:
-    from fenix_spark.functions.texthash import let
-
     if k**n > _MAX_ENUMERATED_CELLS:
         raise ValueError(
             f"probe_cells_expr enumerates all k^n = {k**n:,} joint cells "
@@ -185,69 +207,31 @@ def _probe_cells_from_cents(
             "per query — same result, plan size O(k*n) not O(k^n)."
         )
     sub_dim = cents.shape[2]
+    # Built through the fluent API the k^n-struct scorer costs ~6 py4j
+    # round trips per cell (~1.7 s of driver time per invocation at 64
+    # cells); as one SQL string it parses JVM-side in a single call (see
+    # lit_double_array for the literal-fidelity argument). The n·k
+    # distances are bound once per row as the lambda variable ``d``,
+    # not evaluated once per joint cell.
+    col = "`" + column.replace("`", "``") + "`"
 
-    # The k^n-struct scorer is ~6 py4j round trips per cell built
-    # through the fluent API (~1.7 s of driver time per invocation at
-    # 64 cells); rendering the WHOLE let-bound expression as one SQL
-    # string parses JVM-side to the same tree (see lit_double_array for
-    # the literal-fidelity argument). Fluent fallback for metrics
-    # without a SQL rendering or non-finite centroids.
-    d_sql = _sql_distance(metric, "u", "v")
-    if d_sql is not None and np.isfinite(cents).all() and "`" not in column:
-        col = f"`{column}`"
+    def sub(j: int) -> str:
+        return f"CAST(slice({col}, {j * sub_dim + 1}, {sub_dim}) AS ARRAY<DOUBLE>)"
 
-        def sub(j: int) -> str:
-            return f"CAST(slice({col}, {j * sub_dim + 1}, {sub_dim}) AS ARRAY<DOUBLE>)"
+    def cent(j: int, c: int) -> str:
+        return "array(" + ",".join(sql_double(x) for x in cents[j, c]) + ")"
 
-        def cent(j: int, c: int) -> str:
-            return "array(" + ",".join(sql_double(x) for x in cents[j, c]) + ")"
-
-        dists = "array(" + ",".join(
-            _sql_distance(metric, sub(j), cent(j, c))
-            for j in range(n)
-            for c in range(k)
-        ) + ")"  # flat [j * k + c]
-        structs = ",".join(
-            "struct("
-            + " + ".join(
-                f"element_at(d, {j * k + _digit(joint, j, k, n) + 1})"
-                for j in range(n)
-            )
-            + f" AS score, CAST({joint} AS BIGINT) AS joint)"
-            for joint in range(k**n)
-        )
-        body = (
-            f"transform(slice(array_sort(array({structs})), 1, {probes}), "
-            "s -> s.joint)"
-        )
-        return F.expr(f"element_at(transform(array({dists}), d -> {body}), 1)")
-
-    dists_col = F.array(
-        *[
-            distance(metric, sub_vector(column, j, sub_dim), query_literal(cents[j, c]))
-            for j in range(n)
-            for c in range(k)
-        ]
-    )  # flat [j * k + c]
-
-    def top_probes(d: Column) -> Column:
-        scored = F.array(
-            *[
-                F.struct(
-                    sum(
-                        F.element_at(d, j * k + _digit(joint, j, k, n) + 1)
-                        for j in range(n)
-                    ).alias("score"),
-                    F.lit(joint).cast("bigint").alias("joint"),
-                )
-                for joint in range(k**n)
-            ]
-        )
-        return F.transform(
-            F.slice(F.array_sort(scored), 1, probes), lambda s: s["joint"]
-        )
-
-    return let(dists_col, top_probes)
+    dists = "array(" + ",".join(
+        _sql_distance(metric, sub(j), cent(j, c)) for j in range(n) for c in range(k)
+    ) + ")"  # flat [j * k + c]
+    structs = ",".join(
+        "struct("
+        + " + ".join(f"element_at(d, {j * k + _digit(joint, j, k, n) + 1})" for j in range(n))
+        + f" AS score, CAST({joint} AS BIGINT) AS joint)"
+        for joint in range(k**n)
+    )
+    body = f"transform(slice(array_sort(array({structs})), 1, {probes}), s -> s.joint)"
+    return F.expr(f"element_at(transform(array({dists}), d -> {body}), 1)")
 
 
 def _digit(joint: int, j: int, k: int, n: int) -> int:
@@ -361,9 +345,14 @@ def adc_lut(coding: DataFrame, target: Sequence[float], metric: str | None = Non
     ``list_sum`` applies to identical centroid/query doubles — so an
     oracle can recompute the tables bit-identically in SQL.
     """
-    cents, coding_metric, k, n = coding_to_numpy(coding)
-    metric = metric or coding_metric
-    sub_dim = cents.shape[2]
+    cents, coding_metric, _k, _n = coding_to_numpy(coding)
+    return _lut(cents, target, metric or coding_metric)
+
+
+def _lut(cents, target: Sequence[float], metric: str) -> list[list[float]]:
+    """``adc_lut`` over an already-decoded (n, k, sub_dim) centroid
+    array — the sequential left fold the oracle recomputes."""
+    n, k, sub_dim = cents.shape
     tgt = [float(x) for x in target]
     luts: list[list[float]] = []
     for j in range(n):
@@ -448,35 +437,50 @@ def adc_search(
     column. ``round_to`` rounds each ranking stage for oracle-stable
     boundaries.
     """
-    _, coding_metric, kk, n = coding_to_numpy(coding)
+    cents, coding_metric, kk, n = coding_to_numpy(coding)
     metric = metric or coding_metric
-    luts = adc_lut(coding, target, metric)
-    out = indexed
-    if probes is not None and probes < kk**n:
-        cells = rank_cells(coding, target, metric, limit=probes)
-        out = out.where(F.col(CODE_COL).isin(cells))
-    d = adc_dist_expr(luts, kk, metric)
-    if round_to is not None:
-        d = F.round(d, round_to) + F.lit(0.0)
-    adc = (
-        out.select(id_col, *select, d.alias(DISTANCE_COL))
-        .orderBy(F.col(DISTANCE_COL).asc(), F.col(id_col).asc())
-        .limit(k if rerank is None else rerank)
-    )
+    d = adc_dist_expr(_lut(cents, target, metric), kk, metric)
+    probed = _probed(indexed, coding, target, metric, probes, kk**n)
+    return _adc_top_k(indexed, probed, d, column, target, metric, k, rerank, id_col, select, round_to)
+
+
+def _rounded(d: Column, round_to: int | None) -> Column:
+    # + 0.0 canonicalizes IEEE -0.0 → +0.0 for oracle-stable hashing
+    return d if round_to is None else F.round(d, round_to) + F.lit(0.0)
+
+
+def _adc_top_k(
+    indexed: DataFrame,
+    probed: DataFrame,
+    d: Column,
+    column: str,
+    target: Sequence[float],
+    metric: str,
+    k: int,
+    rerank: int | None,
+    id_col: str,
+    select: Sequence[str],
+    round_to: int | None,
+) -> DataFrame:
+    """The tail every ADC search shares: top-k (or top-``rerank``) of
+    ``probed`` by the looked-up distance ``d``, ties by id; with
+    ``rerank`` the shortlist is broadcast into a hash join against
+    ``indexed`` so the vector column is read for shortlist rows only,
+    and re-scored exactly."""
+
+    def top(rows: DataFrame, dist: Column, limit: int) -> DataFrame:
+        return (
+            rows.select(id_col, *select, _rounded(dist, round_to).alias(DISTANCE_COL))
+            .orderBy(F.col(DISTANCE_COL).asc(), F.col(id_col).asc())
+            .limit(limit)
+        )
+
+    adc = top(probed, d, k if rerank is None else rerank)
     if rerank is None:
         return adc
-    # Exact rerank: broadcast the tiny shortlist into a hash join so
-    # the vector column is read once, for shortlist rows only.
     shortlist = F.broadcast(adc.select(F.col(id_col).alias("__sid")))
     exact = distance(metric, vec_double(column), query_literal(target))
-    if round_to is not None:
-        exact = F.round(exact, round_to) + F.lit(0.0)
-    return (
-        indexed.join(shortlist, F.col(id_col) == F.col("__sid"))
-        .select(id_col, *select, exact.alias(DISTANCE_COL))
-        .orderBy(F.col(DISTANCE_COL).asc(), F.col(id_col).asc())
-        .limit(k)
-    )
+    return top(indexed.join(shortlist, F.col(id_col) == F.col("__sid")), exact, k)
 
 
 def batch_probe_search(
@@ -522,10 +526,7 @@ def batch_probe_search(
             ).alias("__probe"),
         )
     cand = q.join(indexed, q["__probe"] == indexed[CODE_COL])
-    d = distance(metric, vec_double(column), F.col("__qvec"))
-    if round_to is not None:
-        # + 0.0 canonicalizes IEEE -0.0 → +0.0 for oracle-stable hashing
-        d = F.round(d, round_to) + F.lit(0.0)
+    d = _rounded(distance(metric, vec_double(column), F.col("__qvec")), round_to)
     cand = cand.select(
         "query_id", F.col(right_id).alias("right_id"), d.alias(DISTANCE_COL)
     )
@@ -598,42 +599,24 @@ def ivfpq_search(
     alone."""
     _, coarse_metric, ck, cn = coding_to_numpy(coarse)
     metric = metric or coarse_metric
-    out = indexed
-    if probes is not None and probes < ck**cn:
-        cells = rank_cells(coarse, target, metric, limit=probes)
-        out = out.where(F.col(CODE_COL).isin(cells))
-    _, _, fk, _fn = coding_to_numpy(fine)
-    luts = adc_lut(fine, target, metric)
-    d = adc_dist_expr(luts, fk, metric, code_col=FINE_CODE_COL)
-    if round_to is not None:
-        d = F.round(d, round_to) + F.lit(0.0)
-    adc = (
-        out.select(id_col, *select, d.alias(DISTANCE_COL))
-        .orderBy(F.col(DISTANCE_COL).asc(), F.col(id_col).asc())
-        .limit(k if rerank is None else rerank)
-    )
-    if rerank is None:
-        return adc
-    shortlist = F.broadcast(adc.select(F.col(id_col).alias("__sid")))
-    exact = distance(metric, vec_double(column), query_literal(target))
-    if round_to is not None:
-        exact = F.round(exact, round_to) + F.lit(0.0)
-    return (
-        indexed.join(shortlist, F.col(id_col) == F.col("__sid"))
-        .select(id_col, *select, exact.alias(DISTANCE_COL))
-        .orderBy(F.col(DISTANCE_COL).asc(), F.col(id_col).asc())
-        .limit(k)
-    )
+    fine_cents, _, fk, _fn = coding_to_numpy(fine)
+    d = adc_dist_expr(_lut(fine_cents, target, metric), fk, metric, code_col=FINE_CODE_COL)
+    probed = _probed(indexed, coarse, target, metric, probes, ck**cn)
+    return _adc_top_k(indexed, probed, d, column, target, metric, k, rerank, id_col, select, round_to)
 
 
-def _coarse_centroid_expr(coarse_cents, code: Column) -> Column:
-    """array<double> centroid literal selected by a coarse cell id —
-    element_at over k literal arrays (single-codebook coarse coding)."""
-    k = coarse_cents.shape[1]
-    return F.element_at(
-        F.array(*[query_literal(coarse_cents[0, c]) for c in range(k)]),
-        (code.cast("int") + 1),
+def _coarse_residual(column: str, coarse: DataFrame) -> tuple[Column, Column, str]:
+    """(coarse cell code, vector − that cell's centroid, coarse metric)
+    as pure expressions — the centroid is selected by element_at over
+    the k centroid literals of a single-codebook coarse coding."""
+    cents, metric, k, n = coding_to_numpy(coarse)
+    if n != 1:
+        raise ValueError("residual IVF-PQ needs a single-codebook coarse coding (IVF)")
+    code = _code_from_cents(column, cents, metric)
+    centroid = F.element_at(
+        F.array(*[query_literal(cents[0, c]) for c in range(k)]), (code.cast("int") + 1)
     )
+    return code, F.zip_with(vec_double(column), centroid, lambda a, b: a - b), metric
 
 
 def train_residual_coding(
@@ -653,15 +636,9 @@ def train_residual_coding(
     column; residuals are never materialized to storage."""
     from fenix_spark.operators.coder import train_coding
 
-    cents, metric, _k, n = coding_to_numpy(coarse)
-    if n != 1:
-        raise ValueError("residual coding needs a single-codebook coarse coding (IVF)")
+    _code, residual, metric = _coarse_residual(column, coarse)
     if metric not in ("l2", "euclidean"):
         raise ValueError("residual ADC requires the l2 metric")
-    code = assign_code_expr(column, coarse, metric)
-    residual = F.zip_with(
-        vec_double(column), _coarse_centroid_expr(cents, code), lambda a, b: a - b
-    )
     return train_coding(
         df.withColumn("__residual", residual), "__residual", fine_config
     )
@@ -679,13 +656,7 @@ def build_ivfpq_residual_index(
     column), but ``__PQ_CODE__`` encodes vector − coarse_centroid, so
     ``fine`` must come from ``train_residual_coding`` over the same
     coarse coding."""
-    cents, metric, _k, n = coding_to_numpy(coarse)
-    if n != 1:
-        raise ValueError("residual index needs a single-codebook coarse coding")
-    code = assign_code_expr(column, coarse, metric)
-    residual = F.zip_with(
-        vec_double(column), _coarse_centroid_expr(cents, code), lambda a, b: a - b
-    )
+    code, residual, metric = _coarse_residual(column, coarse)
     out = (
         df.withColumn(CODE_COL, code)
         .withColumn("__residual", residual)
@@ -720,26 +691,17 @@ def ivfpq_residual_search(
     exact rerank as in ``ivfpq_search``."""
     cents, metric, ck, n = coding_to_numpy(coarse)
     if n != 1:
-        raise ValueError("residual search needs a single-codebook coarse coding")
-    _, _, fk, _fn = coding_to_numpy(fine)
-    # probes=0 must mean ZERO candidates (matching ivfpq_search), not
-    # probe-everything — `if probes` treated 0 as falsy/None before.
-    cells = rank_cells(coarse, target, metric, limit=probes if probes is not None else ck)
-    if probes is None or probes >= ck:
-        cells = cells[:ck]
+        raise ValueError("residual IVF-PQ needs a single-codebook coarse coding (IVF)")
+    fine_cents, _, fk, fn = coding_to_numpy(fine)
     tgt = [float(x) for x in target]
-    out = indexed
-    if probes is not None and probes < ck:
-        out = out.where(F.col(CODE_COL).isin(cells))
     # LUTs for ALL ck coarse cells (rows outside the probed set are
-    # already filtered away, and computing the extra tables is a few
-    # thousand numpy ops): per fine codebook j, a flat ck×fk literal
-    # indexed by the row's coarse code and code digit.
+    # filtered away, and computing the extra tables is a few thousand
+    # float ops): per fine codebook j, a flat ck×fk literal indexed by
+    # the row's coarse code and code digit.
     luts_by_cell = [
-        adc_lut(fine, [t - float(x) for t, x in zip(tgt, cents[0, c])], metric)
+        _lut(fine_cents, [t - float(x) for t, x in zip(tgt, cents[0, c])], metric)
         for c in range(ck)
     ]
-    _, _, _fk2, fn = coding_to_numpy(fine)
     fcode = F.col(FINE_CODE_COL).cast("bigint")
     ccode = F.col(CODE_COL).cast("bigint")
     total = None
@@ -749,25 +711,8 @@ def ivfpq_residual_search(
         term = F.element_at(lit_double_array(flat), (ccode * fk + digit + 1).cast("int"))
         total = term if total is None else total + term
     d = F.sqrt(total) if metric in ("l2", "euclidean") else total
-    if round_to is not None:
-        d = F.round(d, round_to) + F.lit(0.0)
-    adc = (
-        out.select(id_col, *select, d.alias(DISTANCE_COL))
-        .orderBy(F.col(DISTANCE_COL).asc(), F.col(id_col).asc())
-        .limit(k if rerank is None else rerank)
-    )
-    if rerank is None:
-        return adc
-    shortlist = F.broadcast(adc.select(F.col(id_col).alias("__sid")))
-    exact = distance(metric, vec_double(column), query_literal(target))
-    if round_to is not None:
-        exact = F.round(exact, round_to) + F.lit(0.0)
-    return (
-        indexed.join(shortlist, F.col(id_col) == F.col("__sid"))
-        .select(id_col, *select, exact.alias(DISTANCE_COL))
-        .orderBy(F.col(DISTANCE_COL).asc(), F.col(id_col).asc())
-        .limit(k)
-    )
+    probed = _probed(indexed, coarse, target, metric, probes, ck)
+    return _adc_top_k(indexed, probed, d, column, target, metric, k, rerank, id_col, select, round_to)
 
 
 def filtered_probe_search(

@@ -820,37 +820,6 @@ FROM documents d LEFT JOIN scored s ON d.doc_id = s.doc_id
 """
 
 
-def _anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NOT EXISTS → left-anti join: customers with no orders in 1997.
-    Same shuffle shape as the semi join — keys only."""
-    cust = table(spark, sf_dir, "customer")
-    orders = table(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= ts_lit("1997-01-01"))
-        & (F.col("o_orderdate") < ts_lit("1998-01-01"))
-    )
-    return (
-        cust.join(orders, cust.c_custkey == orders.o_custkey, "left_anti")
-        .groupBy("c_mktsegment")
-        .agg(
-            F.count(F.lit(1)).alias("quiet_customers"),
-            # sum, not avg: the true sum lies ON the 2dp grid (inputs
-            # have 2 decimals), so 2dp rounding can never straddle a
-            # .5 boundary; an avg can, and flakes the value hash.
-            F.round(F.sum("c_acctbal"), 2).alias("sum_acctbal"),
-        )
-    )
-
-
-_ANTI_JOIN_SQL = f"""
-SELECT c_mktsegment, count(*) AS quiet_customers, round(sum(c_acctbal), 2) AS sum_acctbal
-FROM customer
-WHERE NOT EXISTS (
-    SELECT 1 FROM orders WHERE o_custkey = c_custkey
-      AND o_orderdate >= {duck_ts("1997-01-01")} AND o_orderdate < {duck_ts("1998-01-01")})
-GROUP BY c_mktsegment
-"""
-
-
 def _rollup_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP grouping sets over (status, priority): subtotals + grand
     total in one pass — Spark expands grouping sets before the single
@@ -878,31 +847,6 @@ SELECT coalesce(o_orderstatus, 'ALL') AS status,
        count(*) AS n_orders, round(sum(o_totalprice), 2) AS total_price
 FROM orders
 GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
-"""
-
-
-def _percentile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact interpolated percentiles (Spark ``percentile`` ==
-    DuckDB ``quantile_cont``) + distinct counts per group. At 100 TB
-    exact percentiles need a per-group sort; swap in
-    ``percentile_approx`` (t-digest, one pass, mergeable) when 6-dp
-    exactness isn't required — same call shape, no oracle then."""
-    li = table(spark, sf_dir, "lineitem")
-    return li.groupBy("l_returnflag").agg(
-        F.round(F.expr("percentile(l_extendedprice, 0.5)"), 6).alias("p50_price"),
-        F.round(F.expr("percentile(l_extendedprice, 0.95)"), 6).alias("p95_price"),
-        F.countDistinct("l_suppkey").alias("n_suppliers"),
-        F.countDistinct("l_partkey").alias("n_parts"),
-    )
-
-
-_PERCENTILE_STATS_SQL = """
-SELECT l_returnflag,
-       round(quantile_cont(l_extendedprice, 0.5), 6) AS p50_price,
-       round(quantile_cont(l_extendedprice, 0.95), 6) AS p95_price,
-       count(DISTINCT l_suppkey) AS n_suppliers,
-       count(DISTINCT l_partkey) AS n_parts
-FROM lineitem GROUP BY l_returnflag
 """
 
 
@@ -1110,43 +1054,6 @@ WHERE rn <= 3
 """
 
 
-def _tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q10 returned-item reporting: 4-way join + top-20 revenue.
-    Returns-filtered lineitem shuffles on l_orderkey; customer/nation
-    broadcast; final top-20 is TakeOrderedAndProject, never a global
-    sort."""
-    cust = table(spark, sf_dir, "customer")
-    orders = table(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= ts_lit("1996-10-01")) & (F.col("o_orderdate") < ts_lit("1997-01-01"))
-    )
-    li = table(spark, sf_dir, "lineitem").where(F.col("l_returnflag") == "R")
-    nation = table(spark, sf_dir, "nation")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .groupBy("c_custkey", "c_name", "n_name", "c_mktsegment")
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"))
-        .orderBy(F.col("revenue").desc(), F.col("c_custkey").asc())
-        .limit(20)
-    )
-
-
-_TPCH_Q10_SQL = f"""
-SELECT c_custkey, c_name, n_name, c_mktsegment,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation ON c_nationkey = n_nationkey
-WHERE o_orderdate >= {duck_ts("1996-10-01")} AND o_orderdate < {duck_ts("1997-01-01")}
-  AND l_returnflag = 'R'
-GROUP BY c_custkey, c_name, n_name, c_mktsegment
-ORDER BY revenue DESC, c_custkey ASC
-LIMIT 20
-"""
-
-
 def _paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style paragraph dedup (operators/paragraphs.py): the
     corpus is re-chunked into 15-token paragraphs (the synthetic
@@ -1273,31 +1180,6 @@ FROM orders
 JOIN customer ON o_custkey = c_custkey
 WHERE o_orderkey IN (
     SELECT l_orderkey FROM lineitem GROUP BY l_orderkey HAVING sum(l_quantity) > 250)
-"""
-
-
-def _moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding-frame window: 3-order trailing average of each
-    customer's order totals — ROWS BETWEEN 2 PRECEDING AND CURRENT,
-    one shuffle on o_custkey."""
-    orders = table(spark, sf_dir, "orders")
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy("o_orderdate", "o_orderkey")
-        .rowsBetween(-2, 0)
-    )
-    return orders.where(F.col("o_custkey") < 200).select(
-        "o_custkey",
-        "o_orderkey",
-        F.round(F.avg("o_totalprice").over(w), 4).alias("trailing_avg"),
-    )
-
-
-_MOVING_AVG_SQL = """
-SELECT o_custkey, o_orderkey,
-       round(avg(o_totalprice) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-                                     ROWS BETWEEN 2 PRECEDING AND CURRENT ROW), 4) AS trailing_avg
-FROM orders WHERE o_custkey < 200
 """
 
 
@@ -1621,31 +1503,6 @@ WITH t AS (
 SELECT vec_id, t.meta.label AS label, t.meta.dim AS dim,
        round(t.vec.head, 6) AS head, round(sqrt(t.vec.sq_norm), 6) AS norm
 FROM t
-"""
-
-
-def _distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact distinct count via the explicit two-phase form:
-    groupBy(key, user) pre-dedup, then count per key. On skewed keys
-    this spreads phase one across all (key, user) partitions instead
-    of funneling each key's full value stream to one reducer — the
-    hand-rolled equivalent of what COUNT(DISTINCT) plans into, kept
-    explicit so it composes (e.g. add HLL sketch columns alongside)."""
-    ev = events_table(spark, sf_dir)
-    return (
-        ev.groupBy("event_type", "user_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("distinct_users"),
-            F.sum("n").alias("total_events"),
-        )
-    )
-
-
-_DISTINCT_USERS_SQL = """
-SELECT event_type, count(DISTINCT user_id) AS distinct_users, count(*) AS total_events
-FROM events GROUP BY event_type
 """
 
 
@@ -2367,37 +2224,6 @@ def _decontamination_sql() -> str:
            round(h.n_hits / t.n_grams, 6) AS hit_frac
     FROM hit h JOIN tot t USING (doc_id)
     """
-
-
-_PIVOT_PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
-
-
-def _pivot_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pivot (crosstab): order counts by status × priority. The
-    explicit value list keeps it a single-pass hash aggregate (no
-    distinct-values pre-scan) — the only form that works on unbounded
-    key spaces at scale."""
-    orders = table(spark, sf_dir, "orders")
-    out = (
-        orders.groupBy("o_orderstatus")
-        .pivot("o_orderpriority", _PIVOT_PRIORITIES)
-        .agg(F.count(F.lit(1)))
-        .na.fill(0)
-    )
-    renames = {p: f"p{i + 1}" for i, p in enumerate(_PIVOT_PRIORITIES)}
-    for old, new in renames.items():
-        out = out.withColumnRenamed(old, new)
-    return out
-
-
-_PIVOT_SQL = f"""
-SELECT o_orderstatus,
-       {", ".join(
-           f"sum(CASE WHEN o_orderpriority = '{p}' THEN 1 ELSE 0 END)::BIGINT AS p{i + 1}"
-           for i, p in enumerate(_PIVOT_PRIORITIES)
-       )}
-FROM orders GROUP BY o_orderstatus
-"""
 
 
 def _label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -17,13 +17,13 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 def main() -> None:
     src = open(os.path.join(ROOT, "fenix_spark", "__init__.py")).read()
     tree = ast.parse(src)
-    homes: dict[str, str] = {}
-    for node in ast.walk(tree):
-        if isinstance(node, ast.Dict):
-            keys = [k.value for k in node.keys if isinstance(k, ast.Constant)]
-            vals = [v.value for v in node.values if isinstance(v, ast.Constant)]
-            if len(keys) == len(vals) and len(keys) > 20:
-                homes = dict(zip(keys, vals))
+    (homes_dict,) = (
+        node.value
+        for node in tree.body
+        if isinstance(node, ast.Assign)
+        and any(isinstance(t, ast.Name) and t.id == "_HOMES" for t in node.targets)
+    )
+    homes: dict[str, str] = ast.literal_eval(homes_dict)
     # session helpers live outside the lazy map
     for eager in ("get_session", "tune_session", "recommend_confs", "apply_confs"):
         homes.setdefault(eager, "fenix_spark.session")

@@ -595,6 +595,45 @@ def test_pinned_tickets_survive_one_compact_then_fail_loud(spark, served, sharde
         client.conn.do_get(tickets[0]).read_all()
 
 
+def test_shard_plan_reads_the_manifest_pointer_once(served, monkeypatch):
+    """A commit landing while get_flight_info plans the shards must not
+    pair the new generation's id with the old generation's file names
+    (every such ticket would fail as a stale plan): the plan comes
+    from one pointer read, so its tickets serve the generation read."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from fenix_spark import catalog, manifest
+
+    server, client, root = served
+    path = catalog.source_path(root, "racegen")
+
+    def publish(tag: str, n: int) -> None:
+        gen, d = manifest.begin(path)
+        os.makedirs(d)
+        pq.write_table(pa.table({"k": list(range(n))}), os.path.join(d, f"part-{tag}.parquet"))
+        manifest.commit(path, gen)
+
+    publish("old", 10)
+    real_read = manifest._read_pointer
+    raced: list[str] = []
+
+    def racing_read(p):
+        out = real_read(p)
+        if p == path and not raced:
+            raced.append(p)
+            publish("new", 20)  # commits between this read and any next one
+        return out
+
+    monkeypatch.setattr(manifest, "_read_pointer", racing_read)
+    endpoints, rows, _ = server._flight_info_endpoints("racegen")
+    monkeypatch.undo()
+    assert raced and rows == 10
+    got = sum(client.conn.do_get(ep.ticket).read_all().num_rows for ep in endpoints)
+    assert got == 10
+
+
 def test_pinned_tickets_reject_foreign_files_and_filters(served, sharded):
     _, client, _ = served
     evil = json.dumps(

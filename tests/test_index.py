@@ -131,6 +131,48 @@ def test_probe_cells_expr_matches_rank_cells(embeddings, coding):
         assert got[r["vec_id"]] == rank_cells(coding, r["embedding"], "l2")[:16]
 
 
+@pytest.mark.parametrize("metric", ["cosine", "dot"])
+def test_probe_cells_expr_matches_rank_cells_per_metric(spark, embeddings, coding, metric):
+    """The one rendered cell scorer agrees with the numpy ranking row
+    for row for cosine and dot codings too, not only l2."""
+    from fenix_spark.operators.coder import coding_from_numpy
+
+    typed = coding_from_numpy(spark, coding_to_numpy(coding)[0], metric)
+    rows = embeddings.orderBy("vec_id").limit(200)
+    got = rows.select(
+        "embedding", probe_cells_expr("embedding", typed, probes=16).alias("cells")
+    ).collect()
+    assert len(got) == 200
+    for r in got:
+        assert list(r["cells"]) == rank_cells(typed, r["embedding"], metric)[:16]
+
+
+def test_probe_cells_expr_quotes_backtick_column(embeddings, coding):
+    """A column name containing a backtick is quoted, not spliced."""
+    rows = embeddings.orderBy("vec_id").limit(20).withColumnRenamed("embedding", "emb`x")
+    got = rows.select(
+        F.col("`emb``x`").alias("v"), probe_cells_expr("emb`x", coding, probes=16).alias("cells")
+    ).collect()
+    assert len(got) == 20
+    for r in got:
+        assert list(r["cells"]) == rank_cells(coding, r["v"], "l2")[:16]
+
+
+def test_probe_cells_expr_renders_non_finite_centroids(spark, embeddings, coding):
+    """NaN and ±inf centroid values have no SQL literal; they render as
+    casts, so such a coding still plans and ranks like rank_cells."""
+    from fenix_spark.operators.coder import coding_from_numpy
+
+    cents = coding_to_numpy(coding)[0].copy()
+    cents[0, 3, 0], cents[1, 2, 1], cents[1, 5, 0] = np.inf, np.nan, -np.inf
+    odd = coding_from_numpy(spark, cents, "l2")
+    got = embeddings.orderBy("vec_id").limit(20).select(
+        "embedding", probe_cells_expr("embedding", odd, probes=16).alias("cells")
+    ).collect()
+    for r in got:
+        assert list(r["cells"]) == rank_cells(odd, r["embedding"], "l2")[:16]
+
+
 def test_batch_probe_search_matches_per_query(embeddings, indexed, coding):
     """The set-at-a-time cell-equi-join must return exactly what N
     independent probe_search calls return."""
@@ -554,6 +596,36 @@ def test_residual_probes_zero_means_zero_candidates(spark, embeddings, tmp_path_
     t = embeddings.where("vec_id = 1").head()["embedding"]
     assert ivfpq_residual_search(idx, coarse, fine, "embedding", t, k=5, probes=0).count() == 0
     assert ivfpq_residual_search(idx, coarse, fine, "embedding", t, k=5, probes=2).count() == 5
+
+
+def test_residual_search_decodes_each_coding_once(spark, embeddings, tmp_path_factory, monkeypatch):
+    """One residual search builds all 64 coarse cells' lookup tables
+    from ONE decoded fine coding: three decodes in total (coarse, fine,
+    and the coarse cell ranking), not one per coarse cell."""
+    from fenix_spark.operators import coder, index
+    from fenix_spark.operators.coder import coding_from_numpy
+
+    rng = np.random.default_rng(5)
+    coarse = coding_from_numpy(spark, rng.standard_normal((1, 64, 64)), "l2")
+    fine = coding_from_numpy(spark, rng.standard_normal((4, 16, 16)), "l2")
+    path = str(tmp_path_factory.mktemp("rescount"))
+    index.build_ivfpq_residual_index(embeddings, "embedding", coarse, fine, path)
+    idx = spark.read.parquet(path)
+    t = embeddings.where("vec_id = 1").head()["embedding"]
+
+    calls = []
+    real = coder.coding_to_numpy
+
+    def counting(c):
+        calls.append(c)
+        return real(c)
+
+    monkeypatch.setattr(coder, "coding_to_numpy", counting)
+    monkeypatch.setattr(index, "coding_to_numpy", counting)
+    out = index.ivfpq_residual_search(idx, coarse, fine, "embedding", t, k=5, probes=16)
+    assert len(calls) <= 3
+    monkeypatch.undo()
+    assert out.count() == 5
 
 
 # ------------------------------------------------------- filtered ANN
