@@ -33,24 +33,32 @@ wire protocol is a contract:
   whole spec as JSON (the stateless form ``Client.read_table`` uses).
 
 Scale shape: ``do_get`` STREAMS, it never materializes the result on
-the driver. A plain table read streams record batches straight from
-the table's own parquet files — zero Spark job, zero copy, any table
-size — and so does a filtered/projected read whose filter sits inside
-the vetted pushdown subset (flight_pushdown.translate: comparisons,
-AND/OR/NOT, isin, IS NULL on int/string/bool columns) and whose
-select names plain columns: the Arrow dataset scanner evaluates them
-with partition pruning, exactly as the reference applies its filter
-server-side before streaming (ref flight.py:54-58). Only a read the
-scanner cannot express (other functions, float-column comparisons —
-NaN semantics differ, multi-source unions) is SPOOLED by a
+the driver. Every read verb resolves its layout once (``_layout``),
+builds its Arrow dataset once (``_dataset``: INT96 timestamps, Spark's
+default parquet encoding, read at microseconds) and takes its wire
+schema from ``_wire_schema`` — a Spark analysis derived once per
+layout state and cached, so the schema list_flights / get_flight_info
+advertise is the schema do_get sends. A plain table read streams
+record batches straight from the table's own parquet files — zero
+copy, any table size, and once the layout's schema is cached, zero
+Spark job — and so does a filtered/projected read whose filter sits
+inside the vetted pushdown subset (flight_pushdown.translate:
+comparisons, AND/OR/NOT, isin, IS NULL on int/string/bool columns) and
+whose select names plain columns: the Arrow dataset scanner evaluates
+them with partition pruning, exactly as the reference applies its
+filter server-side before streaming (ref flight.py:54-58). Only a read
+the scanner cannot express (other functions, float-column comparisons
+— NaN semantics differ, multi-source unions) is SPOOLED by a
 distributed parquet write (executors do the work, pushdown shrinks
-it) into a hidden dir, streamed batch-wise, then removed. In both paths the driver holds AT MOST ONE record batch,
-sized to ``Server.get_budget_bytes``; a single batch that exceeds the
-budget even at one row (a giant binary cell) raises loudly instead of
-OOMing. ``do_put`` flushes under ``put_flush_bytes``; ``do_exchange``
-runs the k-NN on the CLUSTER (partition-pruned probe search / batched
-cell equi-join) and only the top-k × ``exchange_max_targets`` rows
-ever reach the driver.
+it) into a hidden dir, streamed batch-wise, then removed. In both
+paths the driver holds AT MOST ONE record batch, sized to
+``Server.get_budget_bytes``; a single batch that exceeds the budget
+even at one row (a giant binary cell) raises loudly instead of
+OOMing. No handler changes a Spark conf: ingest and spool writes use
+the session's own settings. ``do_put`` flushes under
+``put_flush_bytes``; ``do_exchange`` runs the k-NN on the CLUSTER
+(partition-pruned probe search / batched cell equi-join) and only the
+top-k × ``exchange_max_targets`` rows ever reach the driver.
 
 Security boundary: table/coder names are validated as single path
 segments at the catalog chokepoint (``catalog.check_name``) so wire
@@ -68,7 +76,6 @@ reference's and belongs on loopback or a trusted network only.
 
 from __future__ import annotations
 
-import contextlib
 import json
 import os
 import re
@@ -119,49 +126,6 @@ def _require_flight():
     import pyarrow.flight as fl
 
     return fl
-
-
-# set/restore refcount for _micros_parquet_writes, keyed per session:
-# pyarrow Flight dispatches handlers on concurrent gRPC threads, so two
-# overlapping do_put / do_get-spool writes share the session conf — an
-# unguarded set/restore pair could restore the default (INT96) while the
-# other write is still running, breaking the timestamp[us] wire contract
-# (ADVICE r12). First enter sets, last exit restores.
-_micros_lock = threading.Lock()
-_micros_state: dict[int, list] = {}  # id(session) -> [depth, prev-value]
-
-
-@contextlib.contextmanager
-def _micros_parquet_writes(spark):
-    """Scope ``spark.sql.parquet.outputTimestampType=TIMESTAMP_MICROS``
-    to the enclosed write and restore the previous value. Flight-owned
-    writes (do_put ingest, do_get spools) need timestamps to read back
-    as timestamp[us] so footer-derived schemas and the toArrow-exact
-    wire cast agree (Spark's default INT96 reads back as naive
-    nanoseconds); user jobs on the shared session keep their own
-    setting (ADVICE r11). Concurrency-safe: refcounted per session, so
-    overlapping flight writes never see a mid-write restore (ADVICE
-    r12)."""
-    key = "spark.sql.parquet.outputTimestampType"
-    sid = id(spark)
-    with _micros_lock:
-        st = _micros_state.get(sid)
-        if st is None:
-            st = _micros_state[sid] = [0, spark.conf.get(key, None)]
-            spark.conf.set(key, "TIMESTAMP_MICROS")
-        st[0] += 1
-    try:
-        yield
-    finally:
-        with _micros_lock:
-            st[0] -= 1
-            if st[0] == 0:
-                prev = st[1]
-                del _micros_state[sid]
-                if prev is None:
-                    spark.conf.unset(key)
-                else:
-                    spark.conf.set(key, prev)
 
 
 def _hive_walk(d: str) -> tuple[list[str], bool] | None:
@@ -220,6 +184,77 @@ def _pinned_shard_ok(d: str, f: str) -> bool:
     if leaf.startswith(("_", ".")) or not leaf.endswith(".parquet"):
         return False
     return os.path.isfile(os.path.join(d, *parts))
+
+
+def _dataset(d: str, files: Sequence[str]):
+    """pyarrow dataset over ``files`` (paths relative to ``d``) — the
+    one constructor for flat, hive and spool layouts. INT96 timestamps
+    (Spark's default parquet encoding) read at microseconds, Spark's own
+    precision: at pyarrow's default nanoseconds they would not match
+    the wire schema's type, and a value outside 1677-2262 would fail
+    the cast. Hive layouts need the low-level factory: ``ds.dataset(dir)``
+    walks with ignore_prefixes ('.', '_') and would silently SKIP every
+    ``__CODED_ID__=…`` partition dir, and the high-level API cannot
+    attach hive partition columns to an explicit file list — the
+    factory's partition_base_dir can."""
+    import pyarrow.dataset as ds
+    import pyarrow.fs as pafs
+
+    opts = ds.FileSystemFactoryOptions(partition_base_dir=d)
+    if any("/" in f for f in files):
+        opts.partitioning_factory = ds.HivePartitioning.discover()
+    fmt = ds.ParquetFileFormat(
+        read_options=ds.ParquetReadOptions(coerce_int96_timestamp_unit="us")
+    )
+    return ds.FileSystemDatasetFactory(
+        pafs.LocalFileSystem(), [os.path.join(d, f) for f in files], fmt, opts
+    ).finish()
+
+
+def _pushdown(spec: dict, schema, pinned: bool):
+    """(pushed filter Expression or None, pushed column list or None)
+    for the Arrow scanner, else None. A wire filter inside the vetted
+    subset (flight_pushdown.translate — comparisons, AND/OR/NOT, isin,
+    IS NULL on int/string/bool columns) is evaluated by the scanner
+    with PARTITION PRUNING, and a select of plain columns becomes a
+    scanner projection (the reference applies its filter server-side
+    before streaming the same way, ref flight.py:54-58). Anything else
+    returns None for a plain read, which the spool serves with full
+    Spark semantics — fallback is never wrong, only slower. A pinned
+    shard read has no spool fallback (spooling one shard of a pinned
+    read would break generation consistency), so it raises instead of
+    silently degrading."""
+    from fenix_spark import flight_pushdown
+
+    expr = cols = None
+    flt, sel = spec.get("filter"), spec.get("select")
+    if flt:
+        expr = flight_pushdown.translate(flt, schema)
+        if expr is None:
+            if pinned:
+                raise ValueError(
+                    "do_get: a files-pinned shard ticket can only carry "
+                    "a filter inside the pushdown subset (comparisons, "
+                    "AND/OR/NOT, IN, BETWEEN, edge-anchored LIKE, IS "
+                    "NULL on int/string/bool columns) — shard reads "
+                    "have no spool fallback; fetch this filter through "
+                    "a plain ticket instead"
+                )
+            return None
+    if sel:
+        if not (
+            isinstance(sel, (list, tuple))
+            and all(isinstance(c, str) and c in schema.names for c in sel)
+        ):
+            if pinned:
+                raise ValueError(
+                    "do_get: a files-pinned shard ticket can only "
+                    "select plain columns of the layout — fetch "
+                    "computed projections through a plain ticket"
+                )
+            return None
+        cols = list(sel)
+    return expr, cols
 
 
 def _normalize_arrow(table):
@@ -304,57 +339,10 @@ class Server:
                 yield from outer._do_action(ctx, action)
 
             def list_flights(self, ctx, criteria):
-                fld = fl.FlightDescriptor
-                for name in outer.store.list_tables():
-                    yield fl.FlightInfo(
-                        outer._table_schema(name), fld.for_path(name), [], -1, -1
-                    )
+                yield from outer._list_flights()
 
             def get_flight_info(self, ctx, descriptor):
-                # the reference raises NotImplementedError here
-                # (flight.py:24-28); serving the schema + PER-FILE
-                # endpoints is strictly more useful — see
-                # _flight_info_endpoints for the parallel-read
-                # contract. A 3-segment path (name, column, coding)
-                # plans the INDEXED read's shards (S9-over-wire
-                # parallel, the reference's "a:b:c" ticket triple).
-                segs = [p.decode() for p in descriptor.path]
-                if len(segs) not in (1, 3):
-                    raise ValueError(
-                        "get_flight_info: descriptor path is (name) or "
-                        f"(name, column, coding), got {len(segs)} segments"
-                    )
-                name = segs[0]
-                column = segs[1] if len(segs) == 3 else None
-                coding = segs[2] if len(segs) == 3 else None
-                state = outer._state.get(ctx.peer()) or {}
-                if state:
-                    # the whole-table ticket a stateful peer gets will
-                    # merge set-filter/select/coding at do_get time —
-                    # the ADVERTISED schema must be the schema of THAT
-                    # stream, not of the bare table
-                    spec = {**state, "source": name}
-                    if coding is not None:
-                        spec.update(coding=coding, column=column)
-                    from pyspark.sql.pandas.types import to_arrow_schema
-
-                    schema = to_arrow_schema(
-                        outer._spec_df(spec).schema,
-                        error_on_duplicated_field_names_in_struct=True,
-                    )
-                else:
-                    schema = outer._table_schema(
-                        name, coding=coding, column=column
-                    )
-                endpoints, rows, nbytes = outer._flight_info_endpoints(
-                    name,
-                    stateful=bool(state),
-                    coding=coding,
-                    column=column,
-                )
-                return fl.FlightInfo(
-                    schema, descriptor, endpoints, rows, nbytes
-                )
+                return outer._flight_info(ctx, descriptor)
 
         import collections
         import glob
@@ -379,10 +367,15 @@ class Server:
         # beyond any real concurrency; older ones age out.
         self._state: "collections.OrderedDict[str, dict]" = collections.OrderedDict()
         self._state_cap = 1024
-        # wire-schema cache for pinned shard fetches (_pinned_schema)
+        # wire schema per layout state (_wire_schema)
         self._schema_cache: "collections.OrderedDict[tuple, object]" = (
             collections.OrderedDict()
         )
+        # handlers run on concurrent gRPC threads: every compound read
+        # or update of _state and _schema_cache (get + move_to_end +
+        # popitem) happens under this lock, so another peer's eviction
+        # can never land between the steps
+        self._lock = threading.Lock()
         # footer row/byte totals per (file path, mtime, size): a
         # re-plan of an UNCHANGED generation costs O(files) stat calls
         # instead of O(files) parquet footer reads (VERDICT r12 watch
@@ -401,37 +394,51 @@ class Server:
 
     # ---------------------------------------------------------- verbs
 
-    def _table_schema(self, name: str, coding: str | None = None, column: str | None = None):
-        # footer read, not a Spark plan: list_flights over a 50-table
-        # store must not run 50 plan-compile/execute round-trips
-        import os
+    def _peer_state(self, ctx) -> dict:
+        """A snapshot of the peer's set-* state (a copy: a concurrent
+        set-*/del-* on the same connection must not mutate it under
+        the reader)."""
+        with self._lock:
+            return dict(self._state.get(ctx.peer(), {}))
 
-        import pyarrow.parquet as pq
-
-        from fenix_spark.catalog import source_path
-        from fenix_spark.manifest import resolve
-
-        if coding is not None:
-            from pyspark.sql.pandas.types import to_arrow_schema
-
-            return to_arrow_schema(
-                self.store.read_table(name, coding=coding, column=column).schema,
-                error_on_duplicated_field_names_in_struct=True,
+    def _list_flights(self):
+        fl = _require_flight()
+        for name in self.store.list_tables():
+            spec = {"source": name}
+            yield fl.FlightInfo(
+                self._wire_schema(spec, self._layout(spec)),
+                fl.FlightDescriptor.for_path(name), [], -1, -1,
             )
-        d = resolve(source_path(self.store.root, name))
-        for entry in sorted(os.listdir(d)):
-            if entry.endswith(".parquet") and not entry.startswith(("_", ".")):
-                return pq.read_schema(os.path.join(d, entry))
-        # partitioned layout: the leaf footers lack the partition
-        # column, so derive from the Spark read schema — same
-        # derivation _do_get uses for the wire schema, and a metadata
-        # op, not a job (the old limit(0).toArrow() ran one)
-        from pyspark.sql.pandas.types import to_arrow_schema
 
-        return to_arrow_schema(
-            self.store.read_table(name).schema,
-            error_on_duplicated_field_names_in_struct=True,
+    def _flight_info(self, ctx, descriptor):
+        """The reference raises NotImplementedError here
+        (flight.py:24-28); serving the schema + PER-FILE endpoints is
+        strictly more useful — see _flight_info_endpoints for the
+        parallel-read contract. A 3-segment path (name, column, coding)
+        plans the INDEXED read's shards (S9-over-wire parallel, the
+        reference's "a:b:c" ticket triple). A stateful peer's
+        whole-table ticket merges its set-filter/select/coding at
+        do_get time, so the ADVERTISED schema is that of the merged
+        spec — the schema of the stream the peer will be sent."""
+        fl = _require_flight()
+        segs = [p.decode() for p in descriptor.path]
+        if len(segs) not in (1, 3):
+            raise ValueError(
+                "get_flight_info: descriptor path is (name) or "
+                f"(name, column, coding), got {len(segs)} segments"
+            )
+        name = segs[0]
+        column = segs[1] if len(segs) == 3 else None
+        coding = segs[2] if len(segs) == 3 else None
+        state = self._peer_state(ctx)
+        spec = {**state, "source": name}
+        if coding is not None:
+            spec.update(coding=coding, column=column)
+        schema = self._wire_schema(spec, self._layout(spec))
+        endpoints, rows, nbytes = self._flight_info_endpoints(
+            name, stateful=bool(state), coding=coding, column=column
         )
+        return fl.FlightInfo(schema, descriptor, endpoints, rows, nbytes)
 
     # flush threshold for streamed puts: bounds driver memory to one
     # buffer regardless of upload size (tests lower it to force the
@@ -464,10 +471,7 @@ class Server:
             if not buf:
                 return
             tbl = _normalize_arrow(pa.Table.from_batches(buf))
-            with _micros_parquet_writes(self.spark):
-                self.spark.createDataFrame(tbl).write.mode("append").parquet(
-                    staging
-                )
+            self.spark.createDataFrame(tbl).write.mode("append").parquet(staging)
             buf, nbytes, wrote = [], 0, True
 
         for batch in rb:
@@ -479,10 +483,7 @@ class Server:
         if not wrote:
             # empty stream: still create the (empty) table with schema
             tbl = _normalize_arrow(rb.schema.empty_table())
-            with _micros_parquet_writes(self.spark):
-                self.spark.createDataFrame(tbl).write.mode("append").parquet(
-                    staging
-                )
+            self.spark.createDataFrame(tbl).write.mode("append").parquet(staging)
         manifest.commit(path, gen)
         manifest.vacuum(path)
 
@@ -512,150 +513,70 @@ class Server:
     # discipline as put_flush_bytes and similarity_join_brute's budget.
     get_budget_bytes: int = 32 << 20
 
-    def _direct_files(
-        self, source: str, coding: str | None = None, column: str | None = None
-    ) -> tuple[str, int | None, list[str], bool] | None:
-        """(resolved dir, committed gen or None, RELATIVE parquet
-        paths, partitioned?) for a layout servable straight from its
-        parquet files, else None. Flat dirs and hive-partitioned trees
-        (every subdirectory a ``col=value`` segment — the engine's
-        flagship ``__CODED_ID__``-partitioned index layout,
-        operators/index.py:67) both qualify; anything else falls back
-        to the spool path. ``coding``+``column`` resolves the
-        co-written index table instead of the source (the reference's
-        indexed read, ref flight.py:46-60 + io/index/index.py:19-34) —
-        index layouts are rewritten in place, so they carry no
-        manifest generation (gen None)."""
+    def _layout(self, spec: dict) -> tuple[str, int | None, list[str]] | None:
+        """(directory, committed gen or None, RELATIVE parquet paths)
+        of the layout a read of ``spec`` streams from — the one layout
+        resolver for every read verb.
+
+        A plain spec resolves the table's committed generation from ONE
+        manifest pointer read (``coding``+``column``: the co-written
+        index table instead — the reference's indexed read, ref
+        flight.py:46-60 + io/index/index.py:19-34; index layouts are
+        rewritten in place, so they carry no generation) and walks it
+        with ``_hive_walk``: flat dirs and hive trees (the engine's
+        flagship ``__CODED_ID__``-partitioned index layout) are
+        direct-servable. Multi-source reads and any other layout return
+        None, and the read goes to the spool.
+
+        A files-pinned spec (a shard ticket minted by get_flight_info)
+        is PINNED to the ticket's generation, so N parallel shard
+        fetches stay consistent across a concurrent compact — the
+        retention window keeps the superseded generation alive for
+        exactly one follow-on commit. Its files are checked one by one
+        with ``_pinned_shard_ok`` (a whole-layout walk per shard would
+        be O(files²) across a parallel fetch). A malformed ticket, an
+        expired pin and a file outside the layout each raise
+        ``ValueError`` telling the client to re-plan, never mixing
+        generations; an index pin spanning a concurrent re-make fails
+        the membership check (parquet part names are unique per
+        write)."""
         from fenix_spark.catalog import index_path, source_path
-        from fenix_spark.manifest import _resolve_gen
+        from fenix_spark.manifest import _gen_dir, _resolve_gen
 
-        if coding is not None:
-            if column is None or not isinstance(source, str):
-                return None
-            d = index_path(self.store.root, source, column, coding)
-            gen = None
-        else:
-            gen, d = _resolve_gen(source_path(self.store.root, source))
-        if not os.path.isdir(d):
-            return None
-        walk = _hive_walk(d)
-        if walk is None or not walk[0]:
-            return None
-        files, partitioned = walk
-        return d, gen, files, partitioned
-
-    def _make_dataset(self, d: str, files: Sequence[str], partitioned: bool):
-        """pyarrow dataset over explicit files under ``d``. Partitioned
-        layouts need the low-level factory: ``ds.dataset(dir)`` walks
-        with ignore_prefixes ('.', '_') and would silently SKIP every
-        ``__CODED_ID__=…`` partition dir, and the high-level API cannot
-        attach hive partition columns to an explicit file list — the
-        factory's partition_base_dir can (verified: yields the
-        partition column back, typed by discovery)."""
-        import pyarrow.dataset as ds
-
-        paths = [os.path.join(d, f) for f in files]
-        if not partitioned:
-            return ds.dataset(paths, format="parquet")
-        import pyarrow.fs as pafs
-
-        opts = ds.FileSystemFactoryOptions(partition_base_dir=d)
-        opts.partitioning_factory = ds.HivePartitioning.discover()
-        return ds.FileSystemDatasetFactory(
-            pafs.LocalFileSystem(), paths, ds.ParquetFileFormat(), opts
-        ).finish()
-
-    def _direct_plan(self, spec: dict):
-        """(dataset, pushed filter Expression or None, pushed column
-        list or None) for a spec the Arrow dataset scanner can serve
-        WITHOUT a Spark job, else None (→ spool). Extends the r12
-        direct path to filtered/projected reads: a wire filter inside
-        the vetted subset (flight_pushdown.translate — comparisons,
-        AND/OR/NOT, isin, IS NULL on int/string/bool columns) is
-        evaluated by the scanner with PARTITION PRUNING, and a select
-        of plain columns becomes a scanner projection — the result-
-        sized parquet rewrite the spool paid is gone for these reads
-        (VERDICT r12 #1; the reference applies its filter server-side
-        before streaming the same way, ref flight.py:54-58). Filter
-        strings outside the subset and selects naming non-plain
-        columns return None, and the spool path evaluates them with
-        full Spark semantics — fallback is never wrong, only slower."""
-        from fenix_spark import flight_pushdown
-
-        source = spec.get("source")
-        if not isinstance(source, str) or ":" in source:
-            return None
-        direct = self._direct_files(
-            source, coding=spec.get("coding"), column=spec.get("column")
+        source, coding, column = (
+            spec.get("source"), spec.get("coding"), spec.get("column")
         )
-        if direct is None:
-            return None
-        d, _, files, partitioned = direct
-        data = self._make_dataset(d, files, partitioned)
-        expr = cols = None
-        flt, sel = spec.get("filter"), spec.get("select")
-        if flt:
-            expr = flight_pushdown.translate(flt, data.schema)
-            if expr is None:
-                return None
-        if sel:
+        pinned = "files" in spec
+        if pinned:
+            files = spec["files"]
+            if not isinstance(source, str) or ":" in source:
+                raise ValueError("do_get: a files-pinned ticket names one table")
             if not (
-                isinstance(sel, (list, tuple))
-                and all(isinstance(c, str) and c in data.schema.names for c in sel)
+                isinstance(files, list)
+                and files
+                and all(isinstance(f, str) for f in files)
             ):
-                return None
-            cols = list(sel)
-        return data, expr, cols
-
-    def _direct_dataset(self, spec: dict):
-        """``(dataset, pushed filter, pushed columns)`` for a
-        files-pinned shard ticket (minted by get_flight_info's per-file
-        endpoints; ``_do_get`` sends only tickets carrying ``files``
-        here). The read is PINNED to the ticket's manifest generation,
-        so N parallel shard fetches stay consistent across a concurrent
-        compact — the retention window keeps the superseded generation
-        alive for exactly one follow-on commit, and an expired pin
-        fails loudly telling the client to re-plan rather than silently
-        mixing generations. That includes the INDEXED read
-        (``coding``+``column``): the co-written index table is plain
-        hive-partitioned parquet. A shard ticket may carry a PUSHABLE
-        filter/select (r13 — filters are row-local, so per-shard
-        evaluation equals the whole-table filter; the parallel filtered
-        fetch), and one outside the subset fails loud because a shard
-        read has no spool fallback. A malformed ticket (no single table
-        name, or ``files`` not a non-empty list of path strings) raises
-        ``ValueError``."""
-        from fenix_spark.catalog import source_path
-        from fenix_spark.manifest import _gen_dir
-
-        source, pinned = spec.get("source"), spec.get("files")
-        if not isinstance(source, str) or ":" in source:
-            raise ValueError("do_get: a files-pinned ticket names one table")
-        if not (
-            isinstance(pinned, list)
-            and pinned
-            and all(isinstance(f, str) for f in pinned)
-        ):
-            raise ValueError(
-                "do_get: ticket 'files' must be a non-empty list of file "
-                "paths — re-plan via get_flight_info"
-            )
-        coding, column = spec.get("coding"), spec.get("column")
-        if coding is not None:
-            # pinned INDEX shard (S9-over-wire parallel): the index
-            # layout is rewritten in place (no generations), but
-            # parquet part names are unique per write — a ticket
-            # spanning a concurrent re-make fails the membership
-            # check below instead of mixing file sets
-            if column is None:
+                raise ValueError(
+                    "do_get: ticket 'files' must be a non-empty list of file "
+                    "paths — re-plan via get_flight_info"
+                )
+            if coding is not None and column is None:
                 raise ValueError("do_get: pinned index ticket needs column")
-            from fenix_spark.catalog import index_path
-
+        elif not isinstance(source, str) or ":" in source or (
+            coding is not None and column is None
+        ):
+            return None
+        if coding is not None:
             d, gen = index_path(self.store.root, source, column, coding), None
-        else:
+        elif pinned:
             path = source_path(self.store.root, source)
             gen = spec.get("gen")
             d = path if gen is None else _gen_dir(path, int(gen))
+        else:
+            gen, d = _resolve_gen(source_path(self.store.root, source))
+        if not pinned:
+            walk = _hive_walk(d) if os.path.isdir(d) else None
+            return (d, gen, walk[0]) if walk and walk[0] else None
         if not os.path.isdir(d):
             raise ValueError(
                 f"do_get: pinned generation {gen} of {source!r} has been "
@@ -663,58 +584,67 @@ class Server:
                 "rewrite exceed the retention window) — re-plan via "
                 "get_flight_info"
             )
-        # per-FILE validation, not a whole-layout walk: a parallel
-        # fetch issues one do_get per shard, so an O(files) walk
-        # here is O(files²) across the read at 100k-file tables.
-        # The same invariants _hive_walk enforces hold per path:
-        # every directory component a hive segment, the leaf a
-        # visible parquet file, and no traversal tokens.
-        bad = [f for f in pinned if not _pinned_shard_ok(d, f)]
+        bad = [f for f in files if not _pinned_shard_ok(d, f)]
         if bad:
             raise ValueError(
                 f"do_get: ticket names files not in {source!r} gen {gen}: "
                 f"{bad[:3]} — stale plan, re-plan via get_flight_info"
             )
-        partitioned = any("/" in f for f in pinned)
-        data = self._make_dataset(d, pinned, partitioned)
-        # r13: a shard ticket MAY carry filter/select — a pushable
-        # filter is row-local, so evaluating it per shard equals
-        # the whole-table filter exactly (the parallel filtered
-        # fetch, Client.read_table_parallel(filter=...)). A shard
-        # has no spool fallback (spooling one shard of a pinned
-        # read would break generation consistency), so an
-        # unsupported filter fails LOUD instead of silently
-        # degrading.
-        expr = cols = None
+        return d, gen, files
+
+    def _wire_schema(self, spec: dict, layout):
+        """The Arrow schema a read of ``spec`` streams: the derivation
+        ``DataFrame.toArrow`` uses, so the wire contract does not
+        depend on which path serves the bytes, and every verb (list,
+        both get_flight_info shapes, both do_get shapes) tells a client
+        the schema it is sent. The wire filter's reflection check runs
+        first, on every call.
+
+        Deriving it is a Spark analysis (a parquet schema-inference job,
+        plus a partition listing on a wide hive tree), so for a
+        direct-servable ``layout`` it is cached per layout state: the
+        key holds the generation and the mtime of the layout dir; for
+        GEN-LESS layouts (index trees, flat-table dirs — rewritten in
+        place) the max mtime of the first-level partition subdirs is
+        folded in too, since a partition-scoped in-place rewrite
+        (dynamic-partition overwrite touching only col=value subdirs)
+        does not bump the parent dir's mtime (ADVICE r12). Generation
+        dirs are immutable, so the parent stamp alone suffices there.
+        Multi-source and non-direct reads (``layout`` None) spool, a
+        Spark job anyway, and derive every call."""
+        from pyspark.sql.pandas.types import to_arrow_schema
+
         flt, sel = spec.get("filter"), spec.get("select")
         if flt:
-            from fenix_spark import flight_pushdown
-
-            expr = flight_pushdown.translate(flt, data.schema)
-            if expr is None:
-                raise ValueError(
-                    "do_get: a files-pinned shard ticket can only carry "
-                    "a filter inside the pushdown subset (comparisons, "
-                    "AND/OR/NOT, IN, BETWEEN, edge-anchored LIKE, IS "
-                    "NULL on int/string/bool columns) — shard reads "
-                    "have no spool fallback; fetch this filter through "
-                    "a plain ticket instead"
-                )
-        if sel:
-            if not (
-                isinstance(sel, (list, tuple))
-                and all(
-                    isinstance(c, str) and c in data.schema.names
-                    for c in sel
-                )
-            ):
-                raise ValueError(
-                    "do_get: a files-pinned shard ticket can only "
-                    "select plain columns of the layout — fetch "
-                    "computed projections through a plain ticket"
-                )
-            cols = list(sel)
-        return data, expr, cols
+            _wire_filter(flt)
+        key = None
+        if layout is not None:
+            d, gen, _ = layout
+            stamp = os.stat(d).st_mtime_ns
+            if gen is None:
+                for e in os.listdir(d):
+                    p = os.path.join(d, e)
+                    if not e.startswith(".") and os.path.isdir(p):
+                        stamp = max(stamp, os.stat(p).st_mtime_ns)
+            key = (
+                spec["source"], spec.get("coding"), spec.get("column"), gen,
+                stamp, flt, tuple(sel) if sel else None,
+            )
+            with self._lock:
+                hit = self._schema_cache.get(key)
+                if hit is not None:
+                    self._schema_cache.move_to_end(key)
+                    return hit
+        schema = to_arrow_schema(
+            self._spec_df(spec).schema,
+            error_on_duplicated_field_names_in_struct=True,
+        )
+        if key is not None:
+            with self._lock:
+                self._schema_cache[key] = schema
+                while len(self._schema_cache) > 128:
+                    self._schema_cache.popitem(last=False)
+        return schema
 
     def _flight_info_endpoints(
         self,
@@ -736,18 +666,14 @@ class Server:
         set-filter/set-select — planning around the state keeps the
         stateful protocol's results layout-independent (ADVICE r11)."""
         fl = _require_flight()
-        direct = (
-            None
-            if stateful
-            else self._direct_files(name, coding=coding, column=column)
-        )
-        if direct is None:
-            whole: dict = {"source": name}
-            if coding is not None:
-                whole.update(coding=coding, column=column)
+        whole: dict = {"source": name}
+        if coding is not None:
+            whole.update(coding=coding, column=column)
+        layout = None if stateful else self._layout(whole)
+        if layout is None:
             ticket = json.dumps(whole) if coding is not None else name
             return [fl.FlightEndpoint(ticket, [self.grpc])], -1, -1
-        d, gen, files, _ = direct
+        d, gen, files = layout
         import concurrent.futures
 
         import pyarrow.parquet as pq
@@ -787,9 +713,7 @@ class Server:
         for f, (r, b) in zip(files, stats):
             rows += r
             nbytes += b
-            spec: dict = {"source": name, "gen": gen, "files": [f]}
-            if coding is not None:
-                spec.update(coding=coding, column=column)
+            spec = {**whole, "gen": gen, "files": [f]}
             endpoints.append(fl.FlightEndpoint(json.dumps(spec), [self.grpc]))
         return endpoints, rows, nbytes
 
@@ -810,7 +734,7 @@ class Server:
         each fits. Only a single row past the budget raises loudly.
 
         ``flt``/``columns`` are a PUSHED filter expression / column
-        projection (_direct_plan): the filter prunes fragments first —
+        projection (_pushdown): the filter prunes fragments first —
         a predicate on a partition column never opens the other
         partitions' files — then evaluates row-level inside the
         scanner; the projection reaches the parquet column reader."""
@@ -871,8 +795,8 @@ class Server:
                     if batch.num_rows == 0:
                         continue
                     # parquet-read types → the exact schema toArrow()
-                    # would produce (ns→us timestamps, hive-discovered
-                    # partition column types, etc.): the wire contract
+                    # would produce (naive → UTC timestamps, hive-
+                    # discovered partition column types, etc.): the wire contract
                     # does not depend on which path served the bytes.
                     # Reorder by name first — pyarrow appends partition
                     # columns after the file columns, which may not be
@@ -901,63 +825,13 @@ class Server:
             if spool is not None:
                 shutil.rmtree(spool, ignore_errors=True)
 
-    def _pinned_schema(self, spec: dict):
-        """Wire schema for a pinned shard read, cached per layout
-        state — see the call site for why. The mtime of the layout dir
-        is in the key; for GEN-LESS layouts (index trees, flat-table
-        dirs — rewritten in place) the max mtime of the first-level
-        partition subdirs is folded in too: a partition-scoped in-place
-        rewrite (dynamic-partition overwrite touching only col=value
-        subdirs) does not bump the parent dir's mtime, and a stale
-        cached schema would surface as a confusing cast error instead
-        of a re-plan message (ADVICE r12). Generation dirs are
-        immutable, so the parent stamp alone suffices there."""
-        from fenix_spark.catalog import index_path, source_path
-        from fenix_spark.manifest import _gen_dir
-
-        source = spec.get("source")
-        coding, column, gen = spec.get("coding"), spec.get("column"), spec.get("gen")
-        if coding is not None:
-            d = index_path(self.store.root, source, column, coding)
-        else:
-            path = source_path(self.store.root, source)
-            d = path if gen is None else _gen_dir(path, int(gen))
-        try:
-            stamp = os.stat(d).st_mtime_ns
-            if gen is None:
-                for e in os.listdir(d):
-                    if e.startswith("."):
-                        continue
-                    p = os.path.join(d, e)
-                    if os.path.isdir(p):
-                        stamp = max(stamp, os.stat(p).st_mtime_ns)
-        except OSError:
-            stamp = None  # _direct_dataset raises the loud error later
-        sel = spec.get("select")
-        key = (
-            source, coding, column, gen, stamp,
-            spec.get("filter"), tuple(sel) if sel else None,
-        )
-        hit = self._schema_cache.get(key)
-        if hit is not None:
-            self._schema_cache.move_to_end(key)
-            return hit
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        schema = to_arrow_schema(
-            self._spec_df(spec).schema,
-            error_on_duplicated_field_names_in_struct=True,
-        )
-        self._schema_cache[key] = schema
-        while len(self._schema_cache) > 128:
-            self._schema_cache.popitem(last=False)
-        return schema
-
     def _do_get(self, ctx, ticket):
+        import tempfile
+
         fl = _require_flight()
         raw = ticket.ticket.decode()
         spec = json.loads(raw) if raw.startswith("{") else {"source": raw}
-        state = self._state.get(ctx.peer(), {})
+        state = self._peer_state(ctx)
         # a files-pinned ticket (minted by get_flight_info) is complete
         # by construction — per-peer set-* state must not graft a
         # filter onto a shard fetch. A stateful peer presenting one is
@@ -966,80 +840,43 @@ class Server:
         # (get_flight_info already plans a whole-table ticket for
         # stateful peers; this guard covers tickets minted BEFORE the
         # state was set). Fail loud, never layout-dependent results.
-        if "files" in spec and state:
+        pinned = "files" in spec
+        if pinned and state:
             raise ValueError(
                 "do_get: a files-pinned shard ticket ignores set-filter/"
                 "set-select/set-coding session state, which this peer has "
                 "active — clear the session state (del-* verbs) or re-plan "
                 "via get_flight_info, which honors it"
             )
-        spec = spec if "files" in spec else {**state, **spec}
-        if "files" in spec:
-            # pinned shard: a parallel fetch issues one do_get PER
-            # FILE, and deriving the wire schema through
-            # spark.read.parquet runs a full partition-tree listing
-            # each time — O(files²) planning across the fetch. The
-            # schema is identical for every shard of one layout state,
-            # so it is cached per (source, coding, column, gen,
-            # dir-mtime); any rewrite bumps the mtime and misses.
-            # _direct_dataset runs FIRST: it owns the loud "pinned
-            # generation vacuumed — re-plan" error, which must be the
-            # one clients see when the layout is gone (not a raw Spark
-            # path-not-found from the schema derivation, ADVICE r12)
-            data, flt, cols = self._direct_dataset(spec)
-            schema = self._pinned_schema(spec)
-            return fl.GeneratorStream(
-                schema,
-                self._stream_batches(data, schema, None, flt=flt, columns=cols),
-            )
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        df = self._spec_df(spec)
-        # same derivation DataFrame.toArrow uses — the wire schema is
-        # unchanged from the pre-streaming implementation. _spec_df
-        # also runs _wire_filter, so reflection names are rejected
-        # BEFORE any pushdown translation is attempted.
-        schema = to_arrow_schema(
-            df.schema, error_on_duplicated_field_names_in_struct=True
-        )
-        data = flt = cols = None
-        plan = self._direct_plan(spec)
-        if plan is not None:
-            data, flt, cols = plan
-        spool = None
-        if data is None:
+        spec = {**state, **spec}
+        # the layout resolves FIRST: it owns the loud "pinned
+        # generation vacuumed — re-plan" error, which must be the one
+        # clients see when the layout is gone (not a raw Spark
+        # path-not-found from the schema derivation, ADVICE r12)
+        layout = self._layout(spec)
+        schema = self._wire_schema(spec, layout)
+        pushed = spool = None
+        if layout is not None:
+            data = _dataset(layout[0], layout[2])
+            pushed = _pushdown(spec, data.schema, pinned)
+        if pushed is None:
             # computed read: distributed parquet write into a hidden
             # spool dir (executors do the work, pushdown shrinks it),
             # then stream from the files and remove them
-            import shutil
-            import tempfile
-
-            import pyarrow.dataset as ds
-
             os.makedirs(self.store.root, exist_ok=True)
             spool = tempfile.mkdtemp(prefix=".get-spool-", dir=self.store.root)
-            with _micros_parquet_writes(self.spark):
-                df.write.mode("overwrite").parquet(spool)
-            files = [
-                os.path.join(spool, e)
-                for e in sorted(os.listdir(spool))
-                if e.endswith(".parquet") and not e.startswith(("_", "."))
-            ]
-            if not files:
-                shutil.rmtree(spool, ignore_errors=True)
-                return fl.GeneratorStream(schema, iter(()))
-            data = ds.dataset(files, format="parquet")
+            self._spec_df(spec).write.mode("overwrite").parquet(spool)
+            data, pushed = _dataset(spool, _hive_walk(spool)[0]), (None, None)
+        flt, cols = pushed
         return fl.GeneratorStream(
             schema,
             self._stream_batches(data, schema, spool, flt=flt, columns=cols),
         )
 
-    # Batched-search knobs, overridable per server (previously the
-    # operators' constants): the loud bound on a do_exchange query set
-    # (driver holds N×k result rows + broadcasts the N×d query matrix)
-    # and the Arrow-batch chunking of the brute GEMM fast path.
+    # The loud bound on a do_exchange query set (the driver holds N×k
+    # result rows and broadcasts the N×d query matrix), overridable per
+    # server.
     exchange_max_targets: int = 1024
-    exchange_chunk_rows: int = 2048
 
     def _do_exchange(self, descriptor, reader, writer) -> None:
         spec = json.loads(descriptor.command.decode())
@@ -1096,7 +933,7 @@ class Server:
                         column,
                         metric=metric,
                         k=k,
-                        probes=int(spec.get("probes") or 8),
+                        probes=spec.get("probes"),
                         query_id="__qid",
                         right_id=rid,
                     )
@@ -1109,7 +946,6 @@ class Server:
                 out = batch_knn_brute(
                     base, column, targets, metric=metric, k=k, right_id=rid,
                     max_targets=self.exchange_max_targets,
-                    chunk_rows=self.exchange_chunk_rows,
                 )
             sel = common["select"]
             if sel:
@@ -1169,14 +1005,16 @@ class Server:
             "coding", "column", "filter", "select",
         ):
             peer = ctx.peer()
-            self._state.setdefault(peer, {})[kind[4:]] = cfg[kind[4:]]
-            self._state.move_to_end(peer)
-            while len(self._state) > self._state_cap:
-                self._state.popitem(last=False)
+            with self._lock:
+                self._state.setdefault(peer, {})[kind[4:]] = cfg[kind[4:]]
+                self._state.move_to_end(peer)
+                while len(self._state) > self._state_cap:
+                    self._state.popitem(last=False)
         elif kind.startswith("del-") and kind[4:] in (
             "coding", "column", "filter", "select",
         ):
-            self._state.get(ctx.peer(), {}).pop(kind[4:], None)
+            with self._lock:
+                self._state.get(ctx.peer(), {}).pop(kind[4:], None)
         else:
             raise ValueError(f"unknown action {kind!r}")
 

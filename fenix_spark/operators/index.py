@@ -490,7 +490,7 @@ def batch_probe_search(
     column: str,
     metric: str | None = None,
     k: int = 10,
-    probes: int = 16,
+    probes: int | None = 16,
     query_id: str = "vec_id",
     right_id: str = "vec_id",
     round_to: int | None = None,
@@ -508,9 +508,12 @@ def batch_probe_search(
     which IVF keeps low-cardinality and balanced. At 100 TB the probe
     join touches probes/k^n of the index, mirroring single-query
     partition pruning (ref index.py:119-126) set-at-a-time.
+    ``probes=None`` probes every cell (exact), like ``probe_search``.
     """
     cents, coding_metric, kk, n = coding_to_numpy(coding)
     metric = metric or coding_metric
+    if probes is None:
+        probes = kk**n
     if kk**n > _MAX_ENUMERATED_CELLS:
         # large codebook: broadcast-join scorer, plan size O(n)
         q = probe_cells_join(queries, coding, column, probes, metric, query_id).select(

@@ -1138,26 +1138,6 @@ def test_hive_walk_and_pinned_shard_agree(tmp_path):
 # re-plan ordering) and the get_flight_info footer-totals cache
 
 
-def test_micros_conf_refcount_survives_overlapping_writes(spark):
-    """Flight handlers run on concurrent gRPC threads; two overlapping
-    _micros_parquet_writes scopes on the shared session must not
-    restore the conf while the other write is still in flight (ADVICE
-    r12). First enter sets, LAST exit restores."""
-    from fenix_spark.flight import _micros_parquet_writes
-
-    key = "spark.sql.parquet.outputTimestampType"
-    prev = spark.conf.get(key, None)
-    a = _micros_parquet_writes(spark)
-    b = _micros_parquet_writes(spark)
-    a.__enter__()
-    b.__enter__()
-    a.__exit__(None, None, None)
-    # the earlier scope exited, but b's write is conceptually mid-flight
-    assert spark.conf.get(key) == "TIMESTAMP_MICROS"
-    b.__exit__(None, None, None)
-    assert spark.conf.get(key, None) == prev
-
-
 def test_flight_info_replan_of_unchanged_gen_reads_zero_footers(spark, served):
     """Planning cost contract (VERDICT r12 watch item #1): the first
     get_flight_info of a layout reads one footer per file for exact
@@ -1222,9 +1202,9 @@ def test_pinned_schema_key_tracks_partition_subdir_rewrites(served, coded):
     server, _, root = served
     spec = {"source": "coded", "gen": None}
     server._schema_cache.clear()
-    server._pinned_schema(spec)
+    server._wire_schema(spec, server._layout(spec))
     assert len(server._schema_cache) == 1
-    server._pinned_schema(spec)
+    server._wire_schema(spec, server._layout(spec))
     assert len(server._schema_cache) == 1  # unchanged layout: cache hit
     d = catalog.source_path(root, "coded")
     sub = next(e for e in os.listdir(d) if e.startswith("__CODED_ID__="))
@@ -1232,7 +1212,7 @@ def test_pinned_schema_key_tracks_partition_subdir_rewrites(served, coded):
     future = time.time() + 10
     os.utime(os.path.join(d, sub), (future, future))
     os.utime(d, (parent.st_atime, parent.st_mtime))  # parent mtime unchanged
-    server._pinned_schema(spec)
+    server._wire_schema(spec, server._layout(spec))
     assert len(server._schema_cache) == 2  # subdir rewrite missed the cache
 
 
@@ -1536,3 +1516,244 @@ def test_concurrent_planning_shares_the_totals_cache(spark, served):
     # a fifth, post-race plan is fully warm: zero new footer reads
     plan()
     assert server.footer_reads - before == reads
+
+
+# ---------------------------------------------------------------- one
+# read path: layout resolver, INT96-at-µs dataset, cached wire schema
+
+
+def test_spark_written_timestamps_stream_on_every_path(spark, served):
+    """A Spark-written table (INT96, Spark's default parquet timestamp
+    encoding) holding values outside the nanosecond range streams on
+    the plain, parallel, pushed-filter and spooled paths; each stream's
+    schema is the one get_flight_info advertises, and each value is the
+    one Spark itself reads back."""
+    import datetime
+
+    import pyarrow.compute as pc
+
+    from fenix_spark import catalog
+
+    server, client, root = served
+    catalog.make(
+        root,
+        "int96ts",
+        spark.sql(
+            "SELECT 1 AS id, TIMESTAMP'1600-05-05 01:02:03.000004' AS ts "
+            "UNION ALL SELECT 2, TIMESTAMP'2300-01-01 00:00:00' "
+            "UNION ALL SELECT 3, TIMESTAMP'2021-03-04 05:06:07.123456'"
+        ),
+    )
+
+    def local(us):  # PySpark's TimestampType.fromInternal
+        return datetime.datetime.fromtimestamp(us // 1_000_000).replace(
+            microsecond=us % 1_000_000
+        )
+
+    want = sorted(
+        (r["id"], r["ts"])
+        for r in spark.read.parquet(catalog.source_path(root, "int96ts")).collect()
+    )
+    assert len(want) == 3
+    advertised = client.conn.get_flight_info(
+        fl.FlightDescriptor.for_path("int96ts")
+    ).schema
+    assert advertised.field("ts").type == pa.timestamp("us", tz="UTC")
+    reads = {
+        "plain": (lambda: client.read_table("int96ts").read_all(), False),
+        "parallel": (lambda: client.read_table_parallel("int96ts"), False),
+        "pushed": (
+            lambda: client.read_table("int96ts", filter="id >= 1").read_all(),
+            False,
+        ),
+        "spooled": (
+            lambda: client.read_table("int96ts", filter="abs(id) >= 1").read_all(),
+            True,
+        ),
+    }
+    for path, (read, spooled) in reads.items():
+        t = read()
+        assert server.last_get_stats["spooled"] is spooled, path
+        assert t.schema == advertised, path
+        micros = pc.cast(t.column("ts"), pa.int64()).to_pylist()
+        got = sorted(zip(t.column("id").to_pylist(), map(local, micros)))
+        assert got == want, path
+
+
+def _handler_jobs(spark, server, monkeypatch):
+    """``jobs(call)`` → the number of Spark jobs the server's do_get and
+    get_flight_info handlers ran during ``call()``. Handlers run on
+    gRPC threads, so each of this server's handlers is wrapped to tag
+    its own thread with the call's job group; a control job in a second group is awaited
+    afterwards (listener events arrive in order, so once it is visible
+    every job of the call is too)."""
+    import itertools
+    import time
+
+    sc = spark.sparkContext
+    keys = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+    current = {}
+
+    def tagged(handler):
+        def run(*args):
+            sc.setJobGroup(current["group"], current["group"])
+            try:
+                return handler(*args)
+            finally:
+                for key in keys:
+                    sc.setLocalProperty(key, None)
+
+        return run
+
+    impl = type(server._impl)
+    for verb in ("do_get", "get_flight_info"):
+        monkeypatch.setattr(impl, verb, tagged(getattr(impl, verb)))
+    seq = itertools.count()
+
+    def jobs(call) -> int:
+        group = current["group"] = f"flight-read-{next(seq)}"
+        call()
+        try:
+            sc.setJobGroup(group + "-control", group)
+            spark.range(1).collect()
+            deadline = time.time() + 30
+            while not sc.statusTracker().getJobIdsForGroup(group + "-control"):
+                assert time.time() < deadline, "status tracker never saw the control job"
+                time.sleep(0.05)
+        finally:
+            for key in keys:
+                sc.setLocalProperty(key, None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return jobs
+
+
+def test_warm_direct_reads_run_no_spark_job(spark, served, monkeypatch):
+    """The wire schema is derived once per layout state: a repeated
+    plain, pushed-filter or indexed read, and a repeated indexed
+    get_flight_info, stream from the files with zero Spark jobs. The
+    cold reads derive it (a Spark analysis), so the counter is live."""
+    import numpy as np
+
+    server, client, _ = served
+    rng = np.random.default_rng(5)
+    n = 400
+    client.make_table(
+        "jobless",
+        pa.table(
+            {
+                "id": pa.array(range(n), pa.int64()),
+                "label": pa.array(rng.integers(0, 4, n), pa.int64()),
+                "emb": [list(map(float, v)) for v in rng.normal(size=(n, 8))],
+            }
+        ),
+    )
+    client.make_index(
+        "jobless_ivf", "jobless", "emb",
+        config={
+            "metric": "l2", "codebook_size": 4, "num_codebooks": 2,
+            "seed": 1, "max_iter": 4,
+        },
+    )
+    jobs = _handler_jobs(spark, server, monkeypatch)
+    calls = {
+        "plain": lambda: client.read_table("jobless").read_all(),
+        "pushed": lambda: client.read_table("jobless", filter="label = 1").read_all(),
+        "indexed": lambda: client.read_table(
+            "jobless", coding="jobless_ivf", column="emb"
+        ).read_all(),
+        "indexed info": lambda: client.conn.get_flight_info(
+            fl.FlightDescriptor.for_path("jobless", "emb", "jobless_ivf")
+        ),
+    }
+    cold = {name: jobs(call) for name, call in calls.items()}
+    assert cold["plain"] > 0  # control: a cold read derives the schema
+    for name, call in calls.items():
+        assert jobs(call) == 0, name
+        if name != "indexed info":
+            assert server.last_get_stats["spooled"] is False, name
+
+
+def test_batched_exchange_probes_match_single_target(spark, served):
+    """A batched do_exchange reads ``probes`` as a single-target call
+    does: None probes every cell, 0 returns no rows, and a count probes
+    that many cells — so each query of a 3-target call returns what its
+    own single-target call returns."""
+    import numpy as np
+
+    _, client, _ = served
+    rng = np.random.default_rng(17)
+    vecs = rng.normal(size=(400, 8))
+    client.make_table(
+        "probe_vecs",
+        pa.table(
+            {
+                "vec_id": pa.array(range(400), pa.int64()),
+                "emb": [list(map(float, v)) for v in vecs],
+            }
+        ),
+    )
+    client.make_index(
+        "probe_ivf", "probe_vecs", "emb",
+        config={
+            "metric": "l2", "codebook_size": 8, "num_codebooks": 2,
+            "seed": 3, "max_iter": 4,
+        },
+    )
+    targets = [list(map(float, v)) for v in rng.normal(size=(3, 8))]
+    for probes in (None, 0, 16):
+        kw = dict(coding="probe_ivf", maxval=10, probes=probes, id_col="vec_id")
+        batched = client.search(targets, "probe_vecs", "emb", **kw).to_pylist()
+        for qi, target in enumerate(targets):
+            single = client.search(target, "probe_vecs", "emb", **kw)
+            want = single.column("vec_id").to_pylist()
+            got = [r["vec_id"] for r in batched if r["query_index"] == qi]
+            assert got == want, (probes, qi)
+            assert len(want) == (0 if probes == 0 else 10)
+
+
+def test_state_updates_are_safe_under_concurrent_peers(served, monkeypatch):
+    """Four peers set and clear their filters concurrently while the
+    state LRU holds one peer, so every set-* evicts another peer's
+    entry: no call fails, and each peer's next read honours its own
+    filter."""
+    import sys
+    import threading
+
+    server, client, _ = served
+    client.make_table("lockpeople", pa.table({"id": list(range(40))}))
+    monkeypatch.setattr(server, "_state_cap", 1)
+    errors: list[BaseException] = []
+    start = threading.Barrier(4)
+
+    def peer(i: int) -> None:
+        own = f"id >= {10 * i} AND id < {10 * i + 10}"
+        try:
+            with Client(port=server.port) as c:
+                start.wait(timeout=30)
+                for _ in range(200):
+                    c._action("set-filter", filter=own)
+                    c._action("del-filter")
+                c._action("set-filter", filter=own)
+                back = c.read_table("lockpeople", filter=own).read_all()
+                assert sorted(back.column("id").to_pylist()) == list(
+                    range(10 * i, 10 * i + 10)
+                ), i
+        except BaseException as e:  # collected and re-raised on main
+            errors.append(e)
+
+    threads = [threading.Thread(target=peer, args=(i,)) for i in range(4)]
+    # switch threads as often as the interpreter allows, so the
+    # handlers' compound updates interleave far more than by default
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert len(server._state) <= 1
