@@ -150,3 +150,37 @@ def distance(metric: str, u: Column, v: Column) -> Column:
     if metric in ("dot", "inner_product"):
         return neg_dot(u, v)
     raise ValueError(f"unknown metric {metric!r}; expected one of {METRICS}")
+
+
+def fold_distance(metric: str, cols, target: Sequence[float]):
+    """``distance(metric, row, target)`` for every row of a float64
+    matrix given column-major as ``cols`` (dim × rows), BIT-IDENTICAL
+    to the Spark expression: the same operator tree, and every dot
+    product the same left fold from 0.0 over the dimension, taken one
+    vectorised column step at a time. BLAS, ``np.sum`` and
+    ``np.linalg.norm`` reorder the sum and change the bits. Returns
+    None where Spark divides by zero (cosine with a zero-norm vector),
+    whose semantics only Spark can give."""
+    import numpy as np
+
+    q = [float(x) for x in target]
+
+    def fold(term):
+        acc = np.zeros(cols.shape[1])
+        for j in range(len(q)):
+            acc += term(j)
+        return acc
+
+    if metric in ("l2", "euclidean"):
+        return np.sqrt(fold(lambda j: (cols[j] - q[j]) * (cols[j] - q[j])))
+    if metric == "cosine":
+        qq = 0.0
+        for x in q:
+            qq += x * x
+        denom = np.sqrt(fold(lambda j: cols[j] * cols[j])) * math.sqrt(qq)
+        if not denom.all():
+            return None
+        return 0.5 - (0.5 * fold(lambda j: cols[j] * q[j])) / denom
+    if metric in ("dot", "inner_product"):
+        return -fold(lambda j: cols[j] * q[j])
+    raise ValueError(f"unknown metric {metric!r}; expected one of {METRICS}")

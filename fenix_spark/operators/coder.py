@@ -162,7 +162,19 @@ def coding_to_numpy(coding: DataFrame) -> tuple[np.ndarray, str, int, int]:
     ``read_coding`` are driver-local frames, so the collect runs no
     Spark job; any other coding frame is collected like any frame.
     """
-    rows = coding.collect()
+    return _decode(coding.collect())
+
+
+def read_centroids(path: str) -> tuple[np.ndarray, str, int, int]:
+    """``coding_to_numpy`` of a stored coding directory, read with
+    pyarrow on the driver — no Spark frame, no py4j round trip."""
+    import pyarrow.parquet as pq
+
+    return _decode(pq.read_table(path).to_pylist())
+
+
+def _decode(rows) -> tuple[np.ndarray, str, int, int]:
+    """(cents, metric, k, n) of coding rows (``Row``s or dicts)."""
     metric = rows[0]["metric"]
     k = rows[0]["codebook_size"]
     n = rows[0]["num_codebooks"]
@@ -197,9 +209,16 @@ def rank_cells(
     coding: DataFrame, target, metric: str | None = None, limit: int | None = None
 ) -> list[int]:
     """Rank joint cells for a query by the sum of per-codebook centroid
-    distances — the reference's joint-cell scoring (coder.py:171-186),
-    done with numpy over the tiny centroid tensor. Returns joint ids
-    best-first (ties by id, unlike the reference's unstable argsort).
+    distances — the reference's joint-cell scoring (coder.py:171-186).
+    Returns joint ids best-first (ties by id, unlike the reference's
+    unstable argsort); ``rank_centroids`` over the collected coding."""
+    cents, coding_metric, _k, _n = coding_to_numpy(coding)
+    return rank_centroids(cents, target, metric or coding_metric, limit)
+
+
+def rank_centroids(cents: np.ndarray, target, metric: str, limit: int | None = None) -> list[int]:
+    """``rank_cells`` over an already-decoded (n, k, sub_dim) centroid
+    array, done with numpy over the tiny centroid tensor.
 
     ``limit=None`` ranks ALL cells (dense k^n scoring — only allowed
     up to ``_MAX_DENSE_CELLS``). With ``limit`` set, large codebooks
@@ -208,10 +227,8 @@ def rank_cells(
     exactness argument: a prefix pruned at stage j extends only to
     joint cells strictly dominated by the kept prefixes' extensions.
     """
-    cents, coding_metric, k, n = coding_to_numpy(coding)
-    metric = metric or coding_metric
+    n, k, sub_dim = cents.shape
     target = np.asarray(target, dtype="float64")
-    sub_dim = cents.shape[2]
     per_codebook = [
         numpy_metric(metric, cents[j], target[j * sub_dim : (j + 1) * sub_dim]) for j in range(n)
     ]

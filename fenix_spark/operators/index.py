@@ -30,7 +30,8 @@ from fenix_spark.functions.metrics import (
     sql_double,
     vec_double,
 )
-from fenix_spark.operators.coder import coding_to_numpy, rank_cells, sub_vector
+from fenix_spark.operators.coder import coding_to_numpy, rank_centroids, sub_vector
+from fenix_spark.operators.coder import rank_cells  # noqa: F401 - perfbench traces index.rank_cells
 from fenix_spark.operators.search import DISTANCE_COL, knn
 
 CODE_COL = "__CODED_ID__"
@@ -71,10 +72,23 @@ def build_index(
     metric: str | None = None,
 ) -> None:
     """Write ``df`` + ``__CODED_ID__`` partitioned by the code — one map
-    pass over the source, then a parquet layout where every IVF cell is
-    its own partition directory (physical pruning for C2)."""
-    out = df.withColumn(CODE_COL, assign_code_expr(column, coding, metric))
-    out.write.mode("overwrite").partitionBy(CODE_COL).parquet(path)
+    pass over the source and one rebalance shuffle (``_write_cells``),
+    then a parquet layout where every IVF cell is its own partition
+    directory (physical pruning for C2)."""
+    _write_cells(df.withColumn(CODE_COL, assign_code_expr(column, coding, metric)), path, "overwrite")
+
+
+def _write_cells(out: DataFrame, path: str, mode: str) -> None:
+    """Write ``out`` partitioned by ``__CODED_ID__``, about one parquet
+    file per cell. An unshuffled write has every task emit a file into
+    every cell it holds rows of (a 3,000-row 8×2 index: 256 files for
+    64 cells, each one more footer and fragment per read). A REBALANCE
+    by the cell sends each small cell to one write task, and AQE packs
+    small cells into few tasks and splits a cell larger than
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` across several,
+    so one big cell is neither one straggler task nor one giant file
+    (a plain repartition by the cell cannot be split)."""
+    out.hint("rebalance", CODE_COL).write.mode(mode).partitionBy(CODE_COL).parquet(path)
 
 
 def append_to_index(
@@ -95,8 +109,7 @@ def append_to_index(
     appends accumulate small files. The coding must stay frozen —
     retraining centroids re-maps cell ids, which is a rebuild, not an
     append."""
-    out = df.withColumn(CODE_COL, assign_code_expr(column, coding, metric))
-    out.write.mode("append").partitionBy(CODE_COL).parquet(path)
+    _write_cells(df.withColumn(CODE_COL, assign_code_expr(column, coding, metric)), path, "append")
 
 
 def read_index(spark: SparkSession, path: str) -> DataFrame:
@@ -120,29 +133,34 @@ def probe_search(
     user filter (→ partition pruning), then the brute-force KNN tail
     (C1). ``probes=None`` or ≥ k^n degenerates to exact search over all
     cells, matching reference behavior (index.py:113-126)."""
-    _, coding_metric, kk, n = coding_to_numpy(coding)
+    cents, coding_metric, _kk, _n = coding_to_numpy(coding)
     metric = metric or coding_metric
-    probed = _probed(indexed, coding, target, metric, probes, kk**n)
+    probed = _probed(indexed, cents, target, metric, probes)
     return knn(
         probed, column, target, metric=metric, k=k, filter=filter, select=select, id_col=id_col
     )
 
 
 def _probed(
-    indexed: DataFrame,
-    coding: DataFrame,
-    target: Sequence[float],
-    metric: str,
-    probes: int | None,
-    cells: int,
+    indexed: DataFrame, cents, target: Sequence[float], metric: str, probes: int | None
 ) -> DataFrame:
-    """``indexed`` restricted to ``__CODED_ID__ IN`` the top-``probes``
-    of the coding's ``cells`` joint cells for ``target`` — a filter on
-    the partition column, so the scan prunes whole cell directories.
-    ``probes=None`` or ≥ ``cells`` keeps every row; ``probes=0`` none."""
-    if probes is None or probes >= cells:
-        return indexed
-    return indexed.where(F.col(CODE_COL).isin(rank_cells(coding, target, metric, limit=probes)))
+    """``indexed`` restricted to ``__CODED_ID__ IN probed_cells(…)`` —
+    a filter on the partition column, so the scan prunes whole cell
+    directories."""
+    cells = probed_cells(cents, target, metric, probes)
+    return indexed if cells is None else indexed.where(F.col(CODE_COL).isin(cells))
+
+
+def probed_cells(cents, target: Sequence[float], metric: str, probes: int | None) -> list[int] | None:
+    """The joint cells a probe search of ``target`` reads, over a
+    decoded (n, k, sub_dim) centroid array: the top-``probes`` of the
+    k^n cells, or None for every cell (``probes=None`` or ≥ k^n);
+    ``probes=0`` reads none. The one probe decision of the Spark plan
+    and of the server's driver-local search."""
+    n, k, _ = cents.shape
+    if probes is None or probes >= k**n:
+        return None
+    return rank_centroids(cents, target, metric, limit=probes)
 
 
 def probe_cells_expr(column: str, coding: DataFrame, probes: int, metric: str | None = None) -> Column:
@@ -440,7 +458,7 @@ def adc_search(
     cents, coding_metric, kk, n = coding_to_numpy(coding)
     metric = metric or coding_metric
     d = adc_dist_expr(_lut(cents, target, metric), kk, metric)
-    probed = _probed(indexed, coding, target, metric, probes, kk**n)
+    probed = _probed(indexed, cents, target, metric, probes)
     return _adc_top_k(indexed, probed, d, column, target, metric, k, rerank, id_col, select, round_to)
 
 
@@ -575,7 +593,7 @@ def build_ivfpq_index(
     out = df.withColumn(CODE_COL, assign_code_expr(column, coarse, metric)).withColumn(
         FINE_CODE_COL, assign_code_expr(column, fine, metric)
     )
-    out.write.mode("overwrite").partitionBy(CODE_COL).parquet(path)
+    _write_cells(out, path, "overwrite")
 
 
 def ivfpq_search(
@@ -600,11 +618,11 @@ def ivfpq_search(
     all; within them the candidate pass materializes only (id, fine
     code); raw vectors are read for the ``rerank`` shortlist rows
     alone."""
-    _, coarse_metric, ck, cn = coding_to_numpy(coarse)
+    coarse_cents, coarse_metric, _ck, _cn = coding_to_numpy(coarse)
     metric = metric or coarse_metric
     fine_cents, _, fk, _fn = coding_to_numpy(fine)
     d = adc_dist_expr(_lut(fine_cents, target, metric), fk, metric, code_col=FINE_CODE_COL)
-    probed = _probed(indexed, coarse, target, metric, probes, ck**cn)
+    probed = _probed(indexed, coarse_cents, target, metric, probes)
     return _adc_top_k(indexed, probed, d, column, target, metric, k, rerank, id_col, select, round_to)
 
 
@@ -666,7 +684,7 @@ def build_ivfpq_residual_index(
         .withColumn(FINE_CODE_COL, assign_code_expr("__residual", fine, metric))
         .drop("__residual")
     )
-    out.write.mode("overwrite").partitionBy(CODE_COL).parquet(path)
+    _write_cells(out, path, "overwrite")
 
 
 def ivfpq_residual_search(
@@ -714,7 +732,7 @@ def ivfpq_residual_search(
         term = F.element_at(lit_double_array(flat), (ccode * fk + digit + 1).cast("int"))
         total = term if total is None else total + term
     d = F.sqrt(total) if metric in ("l2", "euclidean") else total
-    probed = _probed(indexed, coarse, target, metric, probes, ck)
+    probed = _probed(indexed, cents, target, metric, probes)
     return _adc_top_k(indexed, probed, d, column, target, metric, k, rerank, id_col, select, round_to)
 
 

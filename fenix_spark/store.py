@@ -196,7 +196,11 @@ class Store:
         brute-force KNN (C1). With ``coding`` (+ ``probes``): IVF
         probe search over the indexed layout (C2) — the probe mask
         becomes physical partition pruning. Ties break on ``id_col``
-        when given (stricter than the reference's unstable select_k)."""
+        when given (stricter than the reference's unstable select_k).
+        This is always a Spark plan; the Flight server answers a
+        single-target coded search on the driver instead when the
+        probed cells fit its budget (``Server._local_search``), with
+        the same ids, distance bits and schema."""
         if coding is None:
             from fenix_spark.operators.search import knn
 

@@ -2,8 +2,9 @@
 round-trip of every reference verb — put/get/exchange/actions — against
 an in-process server on an ephemeral port, with the JSON protocol
 (never pickle) and per-peer session state. Search results are checked
-against the SAME operators called directly, so the wire layer is
-proven to add zero logic."""
+against the SAME operators called directly; the one search the server
+answers itself (single-target coded, on the driver) is pinned to the
+Spark path by a differential test."""
 
 from __future__ import annotations
 
@@ -1580,55 +1581,7 @@ def test_spark_written_timestamps_stream_on_every_path(spark, served):
         assert got == want, path
 
 
-def _handler_jobs(spark, server, monkeypatch):
-    """``jobs(call)`` → the number of Spark jobs the server's do_get and
-    get_flight_info handlers ran during ``call()``. Handlers run on
-    gRPC threads, so each of this server's handlers is wrapped to tag
-    its own thread with the call's job group; a control job in a second group is awaited
-    afterwards (listener events arrive in order, so once it is visible
-    every job of the call is too)."""
-    import itertools
-    import time
-
-    sc = spark.sparkContext
-    keys = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
-    current = {}
-
-    def tagged(handler):
-        def run(*args):
-            sc.setJobGroup(current["group"], current["group"])
-            try:
-                return handler(*args)
-            finally:
-                for key in keys:
-                    sc.setLocalProperty(key, None)
-
-        return run
-
-    impl = type(server._impl)
-    for verb in ("do_get", "get_flight_info"):
-        monkeypatch.setattr(impl, verb, tagged(getattr(impl, verb)))
-    seq = itertools.count()
-
-    def jobs(call) -> int:
-        group = current["group"] = f"flight-read-{next(seq)}"
-        call()
-        try:
-            sc.setJobGroup(group + "-control", group)
-            spark.range(1).collect()
-            deadline = time.time() + 30
-            while not sc.statusTracker().getJobIdsForGroup(group + "-control"):
-                assert time.time() < deadline, "status tracker never saw the control job"
-                time.sleep(0.05)
-        finally:
-            for key in keys:
-                sc.setLocalProperty(key, None)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-
-    return jobs
-
-
-def test_warm_direct_reads_run_no_spark_job(spark, served, monkeypatch):
+def test_warm_direct_reads_run_no_spark_job(spark, served, handler_jobs):
     """The wire schema is derived once per layout state: a repeated
     plain, pushed-filter or indexed read, and a repeated indexed
     get_flight_info, stream from the files with zero Spark jobs. The
@@ -1655,7 +1608,7 @@ def test_warm_direct_reads_run_no_spark_job(spark, served, monkeypatch):
             "seed": 1, "max_iter": 4,
         },
     )
-    jobs = _handler_jobs(spark, server, monkeypatch)
+    jobs = handler_jobs(server)
     calls = {
         "plain": lambda: client.read_table("jobless").read_all(),
         "pushed": lambda: client.read_table("jobless", filter="label = 1").read_all(),
@@ -1757,3 +1710,303 @@ def test_state_updates_are_safe_under_concurrent_peers(served, monkeypatch):
     assert not any(t.is_alive() for t in threads)
     assert not errors, errors
     assert len(server._state) <= 1
+
+
+# ------------------------------------------- driver-local point search
+
+
+_VEC_CODING = {
+    "metric": "l2", "codebook_size": 8, "num_codebooks": 2, "seed": 3, "max_iter": 4,
+}
+
+
+def _vector_table(rng, n=600, dim=8):
+    """n rows: vec_id, label 0-2, float32 emb — the last 40 rows
+    repeat earlier vectors under new ids, so top-k sets hold exact
+    distance ties that only the id tie-break orders."""
+    import numpy as np
+
+    vecs = rng.normal(size=(n - 40, dim)).astype("float32")
+    vecs = np.concatenate([vecs, vecs[:40]])
+    return pa.table(
+        {
+            "vec_id": pa.array(range(n), pa.int64()),
+            "label": pa.array([i % 3 for i in range(n)], pa.int64()),
+            "emb": pa.array(list(vecs), pa.list_(pa.float32())),
+        }
+    )
+
+
+def _same_answer(got, want, cell):
+    import numpy as np
+
+    assert got.schema.equals(want.schema, check_metadata=True), (cell, got.schema, want.schema)
+    assert got.column("query_index").to_pylist() == [0] * got.num_rows, cell
+    assert got.drop_columns("__DISTANCE__").equals(want.drop_columns("__DISTANCE__")), cell
+    bits = [np.asarray(t.column("__DISTANCE__"), "float64").view("int64") for t in (got, want)]
+    assert bits[0].tolist() == bits[1].tolist(), cell
+
+
+def test_local_point_search_equals_spark_path(spark, served, handler_jobs, monkeypatch):
+    """A single-target coded search answered on the driver (no Spark
+    job) returns what the Spark path returns — forced by a budget
+    below zero — for all 5 metrics, with and without a pushed filter,
+    probes None/0/16 and select None/[vec_id, label]: the same ids, the
+    same __DISTANCE__ bits and the same Arrow schema, nullability
+    included. Duplicated vectors under distinct ids pin the tie order.
+    An untranslatable filter takes the Spark path unforced. (The first
+    search of a layout state derives its wire schema, a Spark analysis
+    — warmed before counting.)"""
+    import concurrent.futures
+    import itertools
+
+    import numpy as np
+
+    server, client, _ = served
+    rng = np.random.default_rng(11)
+    client.make_table("diffvecs", _vector_table(rng))
+    client.make_index("diff_ivf", "diffvecs", "emb", config=_VEC_CODING)
+    vecs = client.read_table("diffvecs").read_all().sort_by("vec_id")
+    # two targets, alternating over the grid: a random point, and a
+    # stored vector that has a twin
+    targets = [list(map(float, rng.normal(size=8))), vecs.column("emb")[3].as_py()]
+    for sel in (None, ["vec_id", "label"]):  # derive each wire schema once
+        client.search(targets[0], "diffvecs", "emb", coding="diff_ivf", select=sel)
+    conns = [Client(port=server.port) for _ in range(4)]
+    jobs = handler_jobs(server)
+    grid = list(
+        itertools.product(
+            ("l2", "euclidean", "cosine", "dot", "inner_product"),
+            (None, "label = 1", "abs(label) = 1"),
+            (None, 0, 16),
+            (None, ["vec_id", "label"]),
+        )
+    )
+
+    def run(cells, out):
+        """The searches of ``cells`` from 4 concurrent clients."""
+
+        def one(c, i, metric, flt, probes, sel):
+            out[i] = c.search(
+                targets[i % 2], "diffvecs", "emb", coding="diff_ivf", metric=metric,
+                filter=flt, probes=probes, select=sel, maxval=10, id_col="vec_id",
+            )
+
+        with concurrent.futures.ThreadPoolExecutor(4) as pool:
+            list(pool.map(lambda j: [one(conns[j], i, *cell) for i, cell in cells[j::4]], range(4)))
+
+    # one job count per group of calls: a total of 0 means every call
+    # in the group ran none
+    cells = list(enumerate(grid))
+    pushed = [c for c in cells if c[1][1] != "abs(label) = 1"]
+    untranslatable = [c for c in cells if c[1][1] == "abs(label) = 1"]
+    local: dict = {}
+    spark_side: dict = {}
+    assert jobs(lambda: run(pushed, local)) == 0
+    # an untranslatable filter already runs the Spark path here, so
+    # forcing it again would compare Spark with Spark
+    assert jobs(lambda: run(untranslatable, local)) > 0
+    with monkeypatch.context() as m:
+        # below any footer total, the empty probe set's 0 too
+        m.setattr(server, "get_budget_bytes", -1)
+        assert jobs(lambda: run(pushed, spark_side)) > 0
+    for c in conns:
+        c.close()
+    for i, cell in pushed:
+        _same_answer(local[i], spark_side[i], cell)
+    for i, cell in cells:
+        assert local[i].num_rows == (0 if cell[2] == 0 else 10), cell
+    # the stored vector's twin ties it at distance 0: ids order the tie
+    got = client.search(targets[1], "diffvecs", "emb", coding="diff_ivf", maxval=2, id_col="vec_id")
+    assert got.column("vec_id").to_pylist() == [3, 563]
+    assert got.column("__DISTANCE__").to_pylist() == [0.0, 0.0]
+
+
+def test_local_point_search_hands_spark_what_it_cannot_answer(
+    spark, served, handler_jobs, monkeypatch
+):
+    """Each input the driver-local path cannot answer bit-identically
+    runs the Spark path (more than 0 jobs) and gets its answer or
+    error: a null vector, a null element, a zero-norm vector under
+    cosine, probed cells over the budget, an untranslatable filter.
+    Handing a search to Spark costs the local path only the probed
+    cells' listing and footers."""
+    import os
+
+    import numpy as np
+
+    from fenix_spark import flight
+
+    server, client, _ = served
+    rng = np.random.default_rng(12)
+    base = _vector_table(rng, n=200)
+    emb = base.column("emb").to_pylist()
+    emb[0] = None
+    emb[1] = [None] + emb[1][1:]
+    emb[2] = [0.0] * 8
+    # the coder trains on the clean rows (k-means takes no nulls), then
+    # indexes the odd ones
+    client.make_table("oddclean", base)
+    client.make_index("odd_ivf", "oddclean", "emb", config=_VEC_CODING)
+    client.make_table("oddvecs", base.set_column(2, "emb", pa.array(emb, pa.list_(pa.float32()))))
+    client.sync_index("odd_ivf", "oddvecs", "emb")
+    target = list(map(float, rng.normal(size=8)))
+    jobs = handler_jobs(server)
+
+    def search(**kw):
+        kw = {"coding": "odd_ivf", "maxval": 5, "id_col": "vec_id", **kw}
+        return lambda: client.search(target, "oddvecs", "emb", **kw)
+
+    def outcome(call):
+        try:
+            return call()
+        except fl.FlightError as e:
+            return type(e).__name__
+
+    probed = search(probes=8)
+    probed()  # derives the wire schema
+    assert jobs(probed) == 0  # control: the probed cells skip the null rows
+    triggers = {
+        "null vector and element": search(probes=None),
+        "zero norm under cosine": search(metric="cosine", filter="vec_id = 2"),
+        "untranslatable filter": search(probes=8, filter="abs(label) = 1"),
+    }
+    for name, call in triggers.items():
+        assert jobs(lambda: outcome(call)) > 0, name
+        want = outcome(call)
+        with monkeypatch.context() as m:
+            m.setattr(server, "get_budget_bytes", 1)
+            forced = outcome(call)
+        assert type(want) is type(forced), name
+        if isinstance(want, pa.Table):
+            assert want.equals(forced), name
+    # a search bound for Spark costs the local path at most the probed
+    # cells' listing and footers: no index state stamp, no footer of
+    # an unprobed cell, and none at all for a target of the wrong length
+    footers, stamps = [], []
+    real_footers, real_stamp = server._footer_totals, flight._stamp
+    monkeypatch.setattr(server, "_footer_totals", lambda ps: footers.extend(ps) or real_footers(ps))
+    monkeypatch.setattr(flight, "_stamp", lambda d, gen: stamps.append(d) or real_stamp(d, gen))
+    with monkeypatch.context() as m:
+        m.setattr(server, "get_budget_bytes", 1)
+        assert jobs(probed) > 0  # over budget
+        assert 0 < len({os.path.dirname(p) for p in footers}) <= 8, footers
+        assert stamps == []
+        footers.clear()
+        outcome(lambda: client.search(target[:5], "oddvecs", "emb", coding="odd_ivf", probes=8))
+        assert footers == [] and stamps == []
+
+
+def test_local_point_search_sees_rewrites_and_retrained_codings(served):
+    """The probed cells are listed on every search and the centroid
+    cache is keyed by the coding dir's state: rows added by an in-place
+    index rewrite (make_table + sync_index) and a retrained coding
+    (make-coder between two searches) are both seen by the next
+    search."""
+    import numpy as np
+
+    server, client, _ = served
+    rng = np.random.default_rng(13)
+    t = _vector_table(rng, n=300)
+    client.make_table("freshvecs", t)
+    client.make_index("fresh_ivf", "freshvecs", "emb", config=_VEC_CODING)
+    target = list(map(float, rng.normal(size=8)))
+    kw = dict(coding="fresh_ivf", maxval=3, id_col="vec_id")
+    first = client.search(target, "freshvecs", "emb", **kw)
+    assert max(first.column("vec_id").to_pylist()) < 300
+    # three new rows sit exactly on the target
+    extra = pa.table(
+        {
+            "vec_id": pa.array([1000, 1001, 1002], pa.int64()),
+            "label": pa.array([0, 0, 0], pa.int64()),
+            "emb": pa.array([target] * 3, pa.list_(pa.float32())),
+        }
+    )
+    client.make_table("freshvecs", pa.concat_tables([t, extra]))
+    client.sync_index("fresh_ivf", "freshvecs", "emb")
+    again = client.search(target, "freshvecs", "emb", **kw)
+    assert again.column("vec_id").to_pylist() == [1000, 1001, 1002]
+    # retrain with another codebook size: 4x2 = 16 cells, so probes=16
+    # now reads every cell and the answer is the exact top-3 — under
+    # the stale 8x2 coding it would probe 16 of 64 cells
+    client._action(
+        "make-coder", name="fresh_ivf", source="freshvecs", column="emb",
+        config={**_VEC_CODING, "codebook_size": 4},
+    )
+    client.sync_index("fresh_ivf", "freshvecs", "emb")
+    far = list(map(float, -np.asarray(target)))
+    got = client.search(far, "freshvecs", "emb", probes=16, **kw)
+    want = client.search(far, "freshvecs", "emb", probes=None, **kw)
+    assert got.equals(want)
+    assert len(server._cents_cache) >= 2
+
+
+def test_concurrent_local_point_searches_equal_serial(served, handler_jobs):
+    """Two clients × 20 concurrent driver-local searches (the centroid
+    cache under the server lock) return exactly their serial answers,
+    with no Spark job."""
+    import threading
+
+    import numpy as np
+
+    server, client, _ = served
+    rng = np.random.default_rng(14)
+    client.make_table("concvecs", _vector_table(rng, n=400))
+    client.make_index("conc_ivf", "concvecs", "emb", config=_VEC_CODING)
+    targets = [list(map(float, v)) for v in rng.normal(size=(20, 8))]
+
+    def search(c, i):
+        return c.search(
+            targets[i], "concvecs", "emb", coding="conc_ivf", maxval=5,
+            probes=16, id_col="vec_id", filter="label = 2" if i % 5 == 4 else None,
+        )
+
+    serial = [search(client, i) for i in range(20)]
+    server._cents_cache.clear()
+    errors: list[BaseException] = []
+    got: dict = {}
+
+    def run(c_i):
+        try:
+            with Client(port=server.port) as c:
+                for i in range(20):
+                    got[(c_i, i)] = search(c, i)
+        except BaseException as e:  # re-raised on main
+            errors.append(e)
+
+    def both():
+        threads = [threading.Thread(target=run, args=(c_i,)) for c_i in range(2)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+
+    jobs = handler_jobs(server)
+    assert jobs(both) == 0
+    assert not errors, errors
+    for (c_i, i), table in got.items():
+        assert table.equals(serial[i]), (c_i, i)
+    assert len(got) == 40
+
+
+def test_pinned_shard_schema_comes_from_its_generation(served):
+    """A shard ticket planned before a do_put that added a column
+    streams its pinned generation's rows and schema, with a filter set
+    (a schema key not cached yet) — not the committed generation's."""
+    server, client, _ = served
+    client.make_table("pinschema", pa.table({"id": pa.array([0, 1, 2], pa.int64())}))
+    info = client.conn.get_flight_info(fl.FlightDescriptor.for_path("pinschema"))
+    client.make_table(
+        "pinschema",
+        pa.table(
+            {"id": pa.array([5, 6], pa.int64()), "extra": pa.array(["a", "b"])}
+        ),
+    )
+    rows = []
+    for ep in info.endpoints:
+        spec = json.loads(ep.ticket.ticket.decode())
+        spec["filter"] = "id >= 1"
+        t = client.conn.do_get(fl.Ticket(json.dumps(spec).encode())).read_all()
+        assert t.schema.names == ["id"]
+        rows += t.column("id").to_pylist()
+    assert sorted(rows) == [1, 2]

@@ -745,3 +745,51 @@ def test_artifact_codings_are_driver_local(spark):
     ]
     for c in codings:
         assert "LocalTableScan" in _plan(c)
+
+
+def test_index_build_writes_one_file_per_cell(spark, tmp_path):
+    """build_index rebalances by the cell before its partitioned
+    write: each populated cell (all far below the advisory partition
+    size) holds exactly one parquet file. A cell above the advisory
+    size is split by AQE across several tasks and files, so one hot
+    cell is not one straggler task; every row lands in its cell once."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from fenix_spark.operators.coder import coding_from_numpy
+
+    rng = np.random.default_rng(15)
+    cents = rng.normal(size=(2, 8, 4))
+    hot = np.concatenate([cents[0][0], cents[1][0]])
+    vecs = np.concatenate([hot + rng.normal(scale=1e-3, size=(2000, 8)), rng.normal(size=(1000, 8))])
+    df = spark.createDataFrame(
+        [(i, list(map(float, v))) for i, v in enumerate(vecs)],
+        "vec_id bigint, emb array<double>",
+    ).repartition(4)
+    coding = coding_from_numpy(spark, cents, "l2")
+
+    def cell_rows(path):
+        rows = {}
+        for c in os.listdir(path):
+            if c.startswith(CODE_COL + "="):
+                files = [f for f in os.listdir(os.path.join(path, c)) if f.endswith(".parquet")]
+                rows[c] = [pq.read_metadata(os.path.join(path, c, f)).num_rows for f in files]
+        return rows
+
+    build_index(df, "emb", coding, str(tmp_path / "idx"))
+    rows = cell_rows(str(tmp_path / "idx"))
+    assert len(rows) > 8
+    assert all(len(r) == 1 for r in rows.values()), rows
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "16k")
+    try:
+        build_index(df, "emb", coding, str(tmp_path / "split"))
+    finally:
+        spark.conf.set(key, old)
+    rows = cell_rows(str(tmp_path / "split"))
+    big = max(rows, key=lambda c: sum(rows[c]))
+    assert sum(rows[big]) >= 2000
+    assert len(rows[big]) > 1, rows[big]
+    assert sum(map(sum, rows.values())) == 3000
