@@ -327,6 +327,14 @@ def test_simhash_band_join_survives_boilerplate_skew(spark):
         # default OptimizeSkewedJoin refuses to split then; the
         # session forces it (session.py) and so does this test
         "spark.sql.adaptive.forceOptimizeSkewedJoin": "true",
+        # a partition is skewed only if it exceeds BOTH the 1KB
+        # threshold and 2x the median partition; the median shrinks as
+        # B/N (B ~ 60KB of band rows here, N = shuffle width) while a
+        # hot bucket adds only ~3KB, so the split can fire only when
+        # N > B/3KB ~ 15-20 (measured: none at 4..20, fires at 24+).
+        # Pin get_session's own default width so the proof does not
+        # depend on the core count (SPARK_GRAFT_CPUS sets the width).
+        "spark.sql.shuffle.partitions": "32",
     }
     prev = {k: spark.conf.get(k) for k in tuned}
     for k, v in tuned.items():
