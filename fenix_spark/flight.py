@@ -256,7 +256,8 @@ def _pushdown(spec: dict, schema, pinned: bool):
     subset (flight_pushdown.translate — comparisons, AND/OR/NOT, isin,
     IS NULL on int/string/bool columns) is evaluated by the scanner
     with PARTITION PRUNING, and a select of plain columns becomes a
-    scanner projection (the reference applies its filter server-side
+    scanner projection (``[]`` projects none, as Spark's ``select()``
+    does; the reference applies its filter server-side
     before streaming the same way, ref flight.py:54-58). Anything else
     returns None for a plain read, which the spool serves with full
     Spark semantics — fallback is never wrong, only slower. A pinned
@@ -280,7 +281,7 @@ def _pushdown(spec: dict, schema, pinned: bool):
                     "a plain ticket instead"
                 )
             return None
-    if sel:
+    if sel is not None:
         if not (
             isinstance(sel, (list, tuple))
             and all(isinstance(c, str) and c in schema.names for c in sel)
@@ -677,7 +678,7 @@ class Server:
             d, gen, _ = layout
             key = (
                 spec["source"], spec.get("coding"), spec.get("column"), gen,
-                _stamp(d, gen), flt, tuple(sel) if sel else None,
+                _stamp(d, gen), flt, None if sel is None else tuple(sel),
             )
             with self._lock:
                 hit = self._schema_cache.get(key)
@@ -794,7 +795,7 @@ class Server:
             "max_batch_bytes": 0,
             "spooled": spool is not None,
             "pushed_filter": flt is not None,
-            "pushed_columns": list(columns) if columns else None,
+            "pushed_columns": None if columns is None else list(columns),
             "fragments": 0,
         }
         if spool is not None:
@@ -835,7 +836,7 @@ class Server:
                     schema=data.schema,
                     batch_size=batch_rows,
                     filter=flt,
-                    columns=list(columns) if columns else None,
+                    columns=None if columns is None else list(columns),
                 )
                 for batch in scanner.to_batches():
                     if batch.num_rows == 0:
@@ -849,7 +850,8 @@ class Server:
                     # Spark's order
                     if batch.schema.names != schema.names:
                         batch = batch.select(schema.names)
-                    pending = [batch.cast(schema)]
+                    # (a cast to no fields would drop the row count)
+                    pending = [batch.cast(schema) if len(schema) else batch]
                     while pending:
                         batch = pending.pop()
                         if batch.nbytes > budget and batch.num_rows > 1:

@@ -1,5 +1,5 @@
-"""Distance metrics over ``array<float>`` columns as NATIVE column
-expressions (whole-stage-codegen eligible — no Python in the hot path).
+"""The reference's five distance metrics, defined once, in the four
+forms the package computes them in.
 
 Semantics mirror the reference exactly (fenix conventions, NOT textbook):
 
@@ -10,6 +10,13 @@ Semantics mirror the reference exactly (fenix conventions, NOT textbook):
 - ``dot`` / ``inner_product``: NEGATED dot product ``-u·v`` so that
   smaller = closer, making every metric a uniform ascending top-k
   (reference: src/fenix/io/coder/coder.py:47-48).
+
+The forms, one line each:
+
+- Column (``distance``): a Catalyst tree of zip_with + left-fold aggregate.
+- SQL text (``_sql_distance``): the same tree as one parsed string.
+- Driver fold (``fold_distance``): numpy, bit-identical to the Column form.
+- GEMM (``_gemm_distance``): one BLAS product per batch; fast, not bit-exact.
 
 All arithmetic is done in double precision regardless of the stored
 element type: at 100 TB the storage stays float32 (half the scan bytes)
@@ -22,6 +29,7 @@ from __future__ import annotations
 import math
 from collections.abc import Sequence
 
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -107,13 +115,14 @@ def query_literal(target: Sequence[float]) -> Column:
     return lit_double_array(target)
 
 
+def _col_fold(u: Column, v: Column, term) -> Column:
+    """Σ_i term(u_i, v_i) via zip_with + left-fold aggregate from 0.0
+    (codegen'd, no UDF): the fold every other form reproduces."""
+    return F.aggregate(F.zip_with(u, v, term), F.lit(0.0), lambda acc, x: acc + x)
+
+
 def dot(u: Column, v: Column) -> Column:
-    """Σ u_i * v_i via zip_with + aggregate (codegen'd, no UDF)."""
-    return F.aggregate(
-        F.zip_with(u, v, lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    return _col_fold(u, v, lambda a, b: a * b)
 
 
 def norm(u: Column) -> Column:
@@ -121,13 +130,7 @@ def norm(u: Column) -> Column:
 
 
 def l2_distance(u: Column, v: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(u, v, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
+    return F.sqrt(_col_fold(u, v, lambda a, b: (a - b) * (a - b)))
 
 
 def cosine_distance(u: Column, v: Column) -> Column:
@@ -140,47 +143,103 @@ def neg_dot(u: Column, v: Column) -> Column:
     return -dot(u, v)
 
 
+def _kind(metric: str) -> str:
+    """``l2``, ``cosine`` or ``dot``: what one of the reference's five
+    names (src/fenix/flight.py:254-256) computes. Every form dispatches
+    through it, so every form rejects an unknown name the same way."""
+    kind = {"euclidean": "l2", "inner_product": "dot"}.get(metric, metric)
+    if kind not in ("l2", "cosine", "dot"):
+        raise ValueError(f"unknown metric {metric!r}; expected one of {METRICS}")
+    return kind
+
+
 def distance(metric: str, u: Column, v: Column) -> Column:
-    """Dispatch on the reference's 5 metric names
-    (src/fenix/flight.py:254-256)."""
-    if metric in ("l2", "euclidean"):
-        return l2_distance(u, v)
-    if metric == "cosine":
-        return cosine_distance(u, v)
-    if metric in ("dot", "inner_product"):
-        return neg_dot(u, v)
-    raise ValueError(f"unknown metric {metric!r}; expected one of {METRICS}")
+    """The Column form."""
+    return {"l2": l2_distance, "cosine": cosine_distance, "dot": neg_dot}[_kind(metric)](u, v)
 
 
-def fold_distance(metric: str, cols, target: Sequence[float]):
-    """``distance(metric, row, target)`` for every row of a float64
-    matrix given column-major as ``cols`` (dim × rows), BIT-IDENTICAL
-    to the Spark expression: the same operator tree, and every dot
-    product the same left fold from 0.0 over the dimension, taken one
-    vectorised column step at a time. BLAS, ``np.sum`` and
-    ``np.linalg.norm`` reorder the sum and change the bits. Returns
-    None where Spark divides by zero (cosine with a zero-norm vector),
-    whose semantics only Spark can give."""
-    import numpy as np
+def _sql_distance(metric: str, u: str, v: str) -> str:
+    """The SQL-text form over array<double> operands: ``distance``'s
+    fold shapes (zip_with + left-fold aggregate) and operator trees, so
+    values are bit-identical to the Column-built form."""
 
-    q = [float(x) for x in target]
+    def fold(p: str, q: str, term: str = "a * b") -> str:
+        return f"aggregate(zip_with({p}, {q}, (a, b) -> {term}), 0.0D, (acc, x) -> acc + x)"
 
-    def fold(term):
-        acc = np.zeros(cols.shape[1])
-        for j in range(len(q)):
-            acc += term(j)
-        return acc
+    kind = _kind(metric)
+    if kind == "l2":
+        return f"sqrt({fold(u, v, '(a - b) * (a - b)')})"
+    if kind == "cosine":
+        return f"(0.5D - ((0.5D * {fold(u, v)}) / (sqrt({fold(u, u)}) * sqrt({fold(v, v)}))))"
+    return f"-({fold(u, v)})"
 
-    if metric in ("l2", "euclidean"):
-        return np.sqrt(fold(lambda j: (cols[j] - q[j]) * (cols[j] - q[j])))
-    if metric == "cosine":
-        qq = 0.0
-        for x in q:
-            qq += x * x
-        denom = np.sqrt(fold(lambda j: cols[j] * cols[j])) * math.sqrt(qq)
-        if not denom.all():
-            return None
-        return 0.5 - (0.5 * fold(lambda j: cols[j] * q[j])) / denom
-    if metric in ("dot", "inner_product"):
-        return -fold(lambda j: cols[j] * q[j])
-    raise ValueError(f"unknown metric {metric!r}; expected one of {METRICS}")
+
+def _fold(u, v, term) -> np.ndarray:
+    """Σ_i term(u[i], v[i]) over the leading (dimension) axis of two
+    float64 arrays, computed as Spark's ``aggregate`` computes it: a
+    left fold from 0.0, one vectorised step per dimension. BLAS,
+    ``np.sum`` and ``np.linalg.norm`` reorder the sum and change the
+    bits. The trailing axes broadcast (a target is one vector)."""
+    acc = np.zeros(np.broadcast_shapes(np.shape(u)[1:], np.shape(v)[1:]))
+    for a, b in zip(u, v):
+        acc += term(a, b)
+    return acc
+
+
+def _fold_sum(metric: str, u, v) -> np.ndarray:
+    """The part of ``distance`` that adds across sub-vectors, as the
+    fold: l2's sum of squares before its sqrt, dot's negated dot. ADC
+    tables are made of it. Cosine's norms do not split, so it raises."""
+    kind = _kind(metric)
+    if kind == "l2":
+        return _fold(u, v, lambda a, b: np.square(a - b))
+    if kind == "dot":
+        return -_fold(u, v, np.multiply)
+    raise ValueError(
+        f"ADC does not decompose for metric {metric!r}; use l2 (or dot), "
+        "or normalize vectors and use l2 as a cosine surrogate."
+    )
+
+
+def fold_distance(metric: str, cols, target):
+    """The driver fold form: ``distance(metric, row, target)`` for every
+    row of a float64 matrix given column-major as ``cols`` (dim ×
+    rows), BIT-IDENTICAL to the Spark expression: the same operator
+    tree, and every dot product the same left fold from 0.0 over the
+    dimension (``_fold``). ``target`` is one vector, or a dim × rows
+    matrix of one target per row. Returns None where Spark divides by
+    zero (cosine with a zero-norm vector), whose semantics only Spark
+    can give."""
+    v = np.asarray(target, dtype="float64")
+    kind = _kind(metric)
+    if kind != "cosine":
+        d = _fold_sum(metric, cols, v)
+        return np.sqrt(d) if kind == "l2" else d
+    denom = np.sqrt(_fold(cols, cols, np.multiply)) * np.sqrt(_fold(v, v, np.multiply))
+    if not denom.all():
+        return None
+    return 0.5 - (0.5 * _fold(cols, v, np.multiply)) / denom
+
+
+def _gemm_distance(metric: str, round_to: int | None = None):
+    """The GEMM form: a kernel ``(a, b) →`` the len(a) × len(b) matrix
+    of ``distance`` between the rows of two float64 matrices from one
+    ``a @ b.T`` (l2 through |a|² + |b|² − 2·a·b, clamped at 0), rounded
+    to ``round_to`` with -0.0 canonicalized to +0.0 (oracle hashers
+    tell the signs apart). Built on the driver, so an unknown metric
+    raises before any Spark job."""
+    kind = _kind(metric)
+
+    def kernel(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+        gram = a @ b.T
+        if kind == "l2":
+            a_sq, b_sq = (a * a).sum(axis=1), (b * b).sum(axis=1)
+            d = np.sqrt(np.maximum(a_sq[:, None] + b_sq[None, :] - 2.0 * gram, 0.0))
+        elif kind == "cosine":
+            norms = np.linalg.norm(a, axis=1)[:, None] * np.linalg.norm(b, axis=1)[None, :]
+            d = 0.5 - 0.5 * gram / norms
+        else:
+            d = -gram
+        return d if round_to is None else d.round(round_to) + 0.0
+
+    return kernel

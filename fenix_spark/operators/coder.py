@@ -24,6 +24,11 @@ Joint cell id semantics mirror coder.py:171-181 exactly: with n
 codebooks of k cells, id = Σ_j cell_j · k^(n−1−j) (base-k digits,
 codebook 0 most significant); a joint cell's score for a query is the
 SUM of per-codebook distances.
+
+``rank_cells`` scores cells with the driver fold of ``functions.metrics``
+(Spark's own ``aggregate`` order) and sums them left to right, as the
+SQL scorers ``index.probe_cells_expr``/``probe_cells_join`` do, so
+single-target and batched searches rank cells from the same bits.
 """
 
 from __future__ import annotations
@@ -34,6 +39,8 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from fenix_spark.functions.metrics import fold_distance
 
 CODING_SCHEMA = pa.schema(
     [
@@ -75,14 +82,23 @@ def train_coding(
     coding metric (like classic PQ); the coding METRIC governs
     assignment and probe scoring, matching the reference's behavior of
     carrying ``metric`` in the coding config (coder.py:24-29).
+
+    Rows with a null vector or element are left out (null vectors match
+    nothing, like ``knn``); a column with no other row raises.
     """
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
+    # forall is null on a null array, false with a null element
+    df = df.where(F.forall(column, lambda x: x.isNotNull()))
+    none_left = f"train_coding: column {column!r} has no vector without a null"
     if dim is None:
-        dim = len(df.select(column).head()[0])
+        first = df.select(column).head()
+        if first is None:
+            raise ValueError(none_left)
+        dim = len(first[0])
     n, k = config.num_codebooks, config.codebook_size
     if dim % n:
         raise ValueError(f"dim {dim} not divisible by num_codebooks {n}")
@@ -95,7 +111,8 @@ def train_coding(
     try:
         # materialize the cache ONCE so the concurrent fits below read
         # stored blocks instead of racing to compute the projection
-        slices.count()
+        if slices.count() == 0:
+            raise ValueError(none_left)
 
         def fit_one(j: int) -> None:
             km = KMeans(
@@ -185,23 +202,29 @@ def _decode(rows) -> tuple[np.ndarray, str, int, int]:
     return cents, metric, k, n
 
 
-def numpy_metric(metric: str, mat: np.ndarray, target: np.ndarray) -> np.ndarray:
-    """fenix distance conventions for driver-side probe ranking
-    (coder.py:38-50): mat (m, d) vs target (d,) → (m,) distances."""
-    if metric in ("l2", "euclidean"):
-        return np.linalg.norm(mat - target, axis=1)
-    if metric == "cosine":
-        denom = np.linalg.norm(mat, axis=1) * np.linalg.norm(target)
-        return 0.5 - 0.5 * (mat @ target) / denom
-    if metric in ("dot", "inner_product"):
-        return -(mat @ target)
-    raise ValueError(f"unknown metric {metric!r}")
+def _per_cell(fold, cents: np.ndarray, target, metric: str) -> np.ndarray:
+    """``fold(metric, u, v)`` of every centroid of an (n, k, sub_dim)
+    array against its codebook's slice of ``target``, as an (n, k)
+    array: ONE fold over the sub-dimension, step i taking coordinate i
+    of all n·k centroids and of their sub-queries."""
+    n, k, sub_dim = cents.shape
+    # a short target's missing coordinates score NaN (the SQL scorers'
+    # zip_with reads them as null), so ranking it raises no error and
+    # the search's own answer or error stands
+    q = np.full(n * sub_dim, np.nan)
+    t = np.asarray(target, dtype="float64")[: q.size]
+    q[: t.size] = t
+    u = cents.transpose(2, 0, 1).reshape(sub_dim, n * k)
+    d = fold(metric, u, np.repeat(q.reshape(n, sub_dim).T, k, axis=1))
+    if d is None:
+        raise ValueError("cosine ranks no cell against a zero-norm query or centroid sub-vector")
+    return d.reshape(n, k)
 
 
 # Densely scoring k^n joint cells allocates a k^n float64 array —
 # ideal at the reference config (64 cells), catastrophic at production
-# PQ shapes (16^8 cells = 34 GB on the driver). Above this bound
-# rank_cells requires ``limit`` and switches to an exact beam fold.
+# PQ shapes (16^8 cells = 34 GB on the driver). Above this bound a
+# full ranking raises; a ranking with ``limit`` is a beam fold anyway.
 _MAX_DENSE_CELLS = 1 << 22
 
 
@@ -218,46 +241,44 @@ def rank_cells(
 
 def rank_centroids(cents: np.ndarray, target, metric: str, limit: int | None = None) -> list[int]:
     """``rank_cells`` over an already-decoded (n, k, sub_dim) centroid
-    array, done with numpy over the tiny centroid tensor.
-
-    ``limit=None`` ranks ALL cells (dense k^n scoring — only allowed
-    up to ``_MAX_DENSE_CELLS``). With ``limit`` set, large codebooks
-    use an EXACT top-``limit`` beam fold over codebooks — the
-    driver-side twin of ``index.probe_cells_join``'s pruning, same
-    exactness argument: a prefix pruned at stage j extends only to
-    joint cells strictly dominated by the kept prefixes' extensions.
+    array, from ``fold_distance`` (the bits the SQL scorers compute).
+    ``limit=None`` ranks ALL cells densely, up to ``_MAX_DENSE_CELLS``
+    (the twin of ``index.probe_cells_expr``); with ``limit`` set the
+    ranking is the beam fold ``_beam_rank`` (the twin of
+    ``index.probe_cells_join``) at every k^n.
     """
-    n, k, sub_dim = cents.shape
-    target = np.asarray(target, dtype="float64")
-    per_codebook = [
-        numpy_metric(metric, cents[j], target[j * sub_dim : (j + 1) * sub_dim]) for j in range(n)
-    ]
+    n, k, _ = cents.shape
+    per_codebook = _per_cell(fold_distance, cents, target, metric)
+    if limit is not None:
+        return _beam_rank(per_codebook, limit)
     if k**n > _MAX_DENSE_CELLS:
-        if limit is None:
-            raise ValueError(
-                f"ranking all {k**n:,} joint cells densely would allocate "
-                f"{k**n * 8 / 2**30:.0f} GiB on the driver; pass limit= "
-                "(e.g. the probe count) for the exact beam path"
-            )
-        return _beam_rank(per_codebook, k, n, limit)
+        raise ValueError(
+            f"ranking all {k**n:,} joint cells densely would allocate "
+            f"{k**n * 8 / 2**30:.0f} GiB on the driver; pass limit= "
+            "(e.g. the probe count) for the beam path"
+        )
     # score[joint] = Σ_j per_codebook[j][digit_j(joint)]
     score = np.zeros(k**n)
     for j in range(n):
-        reps = k ** (n - 1 - j)
-        tiles = k**j
-        score += np.tile(np.repeat(per_codebook[j], reps), tiles)
-    order = np.lexsort((np.arange(k**n), score))
-    out = [int(i) for i in order]
-    return out if limit is None else out[:limit]
+        score += np.tile(np.repeat(per_codebook[j], k ** (n - 1 - j)), k**j)
+    return [int(i) for i in np.lexsort((np.arange(k**n), score))]
 
 
-def _beam_rank(per_codebook: list[np.ndarray], k: int, n: int, limit: int) -> list[int]:
-    """Exact top-``limit`` (score, joint) fold, codebook 0 most
-    significant — mirrors probe_cells_join's SQL fold including its
-    left-to-right float addition order, so both paths return
-    bit-identical rankings."""
-    beam = [(0.0, 0)]
-    for j in range(n):
-        short = sorted((float(d), c) for c, d in enumerate(per_codebook[j]))[: min(k, limit)]
-        beam = sorted((s + d, joint * k + c) for s, joint in beam for d, c in short)[:limit]
-    return [joint for _, joint in beam]
+def _beam_rank(per_codebook: np.ndarray, limit: int) -> list[int]:
+    """Top-``limit`` (score, joint) fold over the (n, k) per-codebook
+    distances, codebook 0 most significant — ``probe_cells_join``'s SQL
+    fold step for step (shortlists of min(k, limit) cells, left-to-right
+    float adds from 0.0, Spark's order: NaN last, -0.0 == 0.0, ties by
+    joint id), so both return bit-identical rankings. It is the dense
+    ranking's prefix up to rounding: two prefix scores an ulp apart can
+    round to one sum, where the dense order lets a pruned lower joint
+    id in. With n = 2 and ``limit`` ≥ k nothing is pruned early."""
+    k = per_codebook.shape[1]
+    score, joint = np.zeros(1), np.zeros(1, dtype="int64")
+    for d in per_codebook:
+        short = np.lexsort((np.arange(k), d))[: min(k, limit)]
+        score = (score[:, None] + d[short]).ravel()
+        joint = (joint[:, None] * k + short).ravel()
+        keep = np.lexsort((joint, score))[:limit]
+        score, joint = score[keep], joint[keep]
+    return joint.tolist()

@@ -44,7 +44,7 @@ truncation: a partially-converged labeling would silently under-dedup.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from fenix_spark.checkpoint import checkpoint_eager as _ckpt_eager
 
@@ -222,9 +222,8 @@ def dedup_keep_list(
     case each component keeps its HIGHEST-``prefer_col`` row (min id
     among ties; null prefer values lose to any non-null). That is the
     production policy: when a quality score exists, dedup should keep
-    the best copy, not the oldest id. The min-id tie-break negates the
-    id, so ``prefer_col`` needs numeric ids; the default policy takes
-    any orderable id type.
+    the best copy, not the oldest id. Both policies take any orderable
+    id type.
 
     The joins are on ids (+ one prefer value); document payloads ride
     along untouched (column-pruned until the final projection). Up to
@@ -244,18 +243,15 @@ def dedup_keep_list(
             ),
             "node",
         )
-        # per-component winner: max prefer, min id on ties — one
-        # max_by aggregate over (component)-keyed summary rows (nulls
-        # sort last via the is-null flag in the ordering struct)
-        winners = scored.groupBy("component").agg(
-            F.max_by(
-                F.col("node"),
-                F.struct(
-                    F.col("__pref").isNotNull().alias("has"),
-                    F.col("__pref").alias("pref"),
-                    (-F.col("node")).alias("neg_id"),
-                ),
-            ).alias("__keep_id")
+        # per-component winner: max prefer (nulls last), min id on
+        # ties — ids of any orderable type, none negated
+        best = Window.partitionBy("component").orderBy(
+            F.col("__pref").desc_nulls_last(), F.col("node").asc()
+        )
+        winners = (
+            scored.withColumn("__rank", F.row_number().over(best))
+            .where(F.col("__rank") == 1)
+            .select("component", F.col("node").alias("__keep_id"))
         )
         drop = (
             comp.join(winners, "component")

@@ -23,14 +23,15 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from fenix_spark.functions.metrics import (
-    METRICS,
+    _fold_sum,
+    _sql_distance,
     distance,
     lit_double_array,
     query_literal,
     sql_double,
     vec_double,
 )
-from fenix_spark.operators.coder import coding_to_numpy, rank_centroids, sub_vector
+from fenix_spark.operators.coder import _per_cell, coding_to_numpy, rank_centroids, sub_vector
 from fenix_spark.operators.coder import rank_cells  # noqa: F401 - perfbench traces index.rank_cells
 from fenix_spark.operators.search import DISTANCE_COL, knn
 
@@ -187,30 +188,6 @@ def probe_cells_expr(column: str, coding: DataFrame, probes: int, metric: str | 
 _MAX_ENUMERATED_CELLS = 4096
 
 
-def _sql_distance(metric: str, u: str, v: str) -> str:
-    """SQL text for ``functions.metrics.distance`` over array<double>
-    operands — the same fold shapes (zip_with + left-fold aggregate)
-    and operator trees, so values are bit-identical to the Column-built
-    form."""
-
-    def dot(p: str, q: str) -> str:
-        return f"aggregate(zip_with({p}, {q}, (a, b) -> a * b), 0.0D, (acc, x) -> acc + x)"
-
-    if metric in ("l2", "euclidean"):
-        return (
-            f"sqrt(aggregate(zip_with({u}, {v}, (a, b) -> (a - b) * (a - b)), "
-            "0.0D, (acc, x) -> acc + x))"
-        )
-    if metric == "cosine":
-        return (
-            f"(0.5D - ((0.5D * {dot(u, v)}) / "
-            f"(sqrt({dot(u, u)}) * sqrt({dot(v, v)}))))"
-        )
-    if metric in ("dot", "inner_product"):
-        return f"-({dot(u, v)})"
-    raise ValueError(f"unknown metric {metric!r}; expected one of {METRICS}")
-
-
 def _probe_cells_from_cents(
     column: str, cents, k: int, n: int, probes: int, metric: str
 ) -> Column:
@@ -270,8 +247,8 @@ def probe_cells_join(
     bound points at. Plan size is O(n); nothing anywhere is O(k^n).
 
     Returns (query_id, __qvec double-array, __PROBES__ array<bigint>),
-    result-identical to ``probe_cells_expr`` (same (score, joint)
-    ordering, same left-fold float addition order).
+    ranked like ``probe_cells_expr`` (same (score, joint) ordering,
+    same left-fold float addition order; see the exactness note below).
 
     Shape: explode each query into its n sub-vectors, broadcast-join
     the k·n centroid rows on codebook id, compute per-(query, codebook)
@@ -279,11 +256,13 @@ def probe_cells_join(
     the best min(k, probes) cells, then fold the n shortlists into
     joint cells with beam pruning to ``probes`` at every step.
 
-    The shortlist + beam pruning are EXACT, not approximate: if a
+    The shortlist + beam pruning are exact up to float rounding: if a
     prefix is pruned at stage j, each of the ``probes`` kept prefixes
     extends (with the victim's own suffix digits) to a joint cell that
-    strictly precedes the victim's in (score, joint) order — so the
-    victim cannot reach the final top-``probes``. Per-query work is
+    precedes the victim's in (score, joint) order — so the victim
+    cannot reach the final top-``probes`` — unless two prefix scores an
+    ulp apart round to one sum (``coder._beam_rank``, the driver twin,
+    says when that can happen). Per-query work is
     O(n·k + n·probes·min(k, probes)); the two aggregations shuffle only
     (query_id, shortlist) rows, never cells × queries.
     """
@@ -368,34 +347,8 @@ def adc_lut(coding: DataFrame, target: Sequence[float], metric: str | None = Non
 
 
 def _lut(cents, target: Sequence[float], metric: str) -> list[list[float]]:
-    """``adc_lut`` over an already-decoded (n, k, sub_dim) centroid
-    array — the sequential left fold the oracle recomputes."""
-    n, k, sub_dim = cents.shape
-    tgt = [float(x) for x in target]
-    luts: list[list[float]] = []
-    for j in range(n):
-        q = tgt[j * sub_dim : (j + 1) * sub_dim]
-        row: list[float] = []
-        for c in range(k):
-            cent = cents[j, c]
-            acc = 0.0
-            if metric in ("l2", "euclidean"):
-                for d in range(sub_dim):
-                    diff = q[d] - float(cent[d])
-                    acc += diff * diff
-            elif metric in ("dot", "inner_product"):
-                for d in range(sub_dim):
-                    acc += q[d] * float(cent[d])
-                acc = -acc
-            else:
-                raise ValueError(
-                    f"ADC does not decompose for metric {metric!r}; "
-                    "use l2 (or dot), or normalize vectors and use l2 "
-                    "as a cosine surrogate."
-                )
-            row.append(acc)
-        luts.append(row)
-    return luts
+    """``adc_lut`` over an already-decoded (n, k, sub_dim) centroid array."""
+    return _per_cell(_fold_sum, cents, target, metric).tolist()
 
 
 def adc_dist_expr(

@@ -31,7 +31,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from fenix_spark.functions.metrics import distance, query_literal, vec_double
+from fenix_spark.functions.metrics import _gemm_distance, distance, query_literal, vec_double
 
 DISTANCE_COL = "__DISTANCE__"
 
@@ -120,46 +120,25 @@ def similarity_join_brute(
     import pandas as pd
 
     spark = left.sparkSession
-    # Two right-side passes, no persist: a single-row dim probe (one
-    # partition, early-terminated) and ONE capped collect that doubles
-    # as the row-count gate. r5's persist-across-three-passes made an
-    # expensive right-side lineage evaluate once but charged the
-    # common case — a bare parquet scan — a full materialization into
-    # the memory store that cheap column-pruned scans never needed
-    # (embedding_neardup regressed 1.6×). The capped collect keeps the
-    # fail path bounded BY CONSTRUCTION: row_cap already encodes the
-    # byte budget, so collecting row_cap+1 rows before raising stays
-    # inside the memory the caller declared collectable.
-    r_proj = right.select(F.col(right_id).alias(right_id), F.col(column).alias(column))
-    # Byte-aware bound WITHOUT a dedicated dim-probe job: the dim comes
-    # from tensor_shape column metadata when the caller used
-    # with_shape; otherwise the collect is capped at the byte budget's
-    # floor (the smallest row count any dim >= 1 could allow — i.e.
-    # bytes/8, one double per row) and the exact dim read from the
-    # FIRST COLLECTED row re-checks the budget post-collect. The
-    # pre-cap keeps the fail path bounded by construction (a collect
-    # can never exceed the declared byte budget by more than one row's
-    # worth), and the common case saves one Spark job per call.
+    dist = _gemm_distance(metric, round_to)
+    # ONE capped collect of the right side, no persist and no dim-probe
+    # job, doubles as the row-count gate. The cap encodes the byte
+    # budget at the dim from tensor_shape metadata (``with_shape``),
+    # else at its floor of 8 bytes a row, re-checked at the first
+    # collected row's dim — so even the fail path collects no more
+    # than the caller declared collectable. (r5 persisted the right
+    # side across three passes; a bare parquet scan paid a full
+    # memory-store materialization for it, embedding_neardup 1.6×.)
     from fenix_spark.functions.tensors import shape_of
 
     shape = shape_of(right, column)
-    dim = int(shape[-1]) if shape else 0
-    if dim < 0:
-        dim = 0
-    row_cap = max_broadcast_rows
-    if dim > 0:
-        row_cap = min(row_cap, max_broadcast_bytes // (dim * 8))
-    else:
-        # dim unknown until the first collected row: pre-cap at the
-        # byte budget's floor (dim >= 1 → at least 8 bytes/row) so the
-        # fail-path collect can never exceed the declared byte budget
-        # even when the caller lowered it below rows×8.
-        row_cap = min(row_cap, max_broadcast_bytes // 8)
+    dim = max(int(shape[-1]), 0) if shape else 0
+    row_cap = min(max_broadcast_rows, max_broadcast_bytes // (max(dim, 1) * 8))
+    r_proj = right.select(F.col(right_id).alias(right_id), F.col(column).alias(column))
     r_rows = r_proj.limit(row_cap + 1).collect()
     if dim == 0 and r_rows and r_rows[0][1] is not None:
         dim = len(r_rows[0][1])
-        if dim > 0:
-            row_cap = min(row_cap, max_broadcast_bytes // (dim * 8))
+        row_cap = min(row_cap, max_broadcast_bytes // (max(dim, 1) * 8))
     if len(r_rows) > row_cap:
         raise ValueError(
             f"similarity_join_brute: right side exceeds the broadcast "
@@ -185,29 +164,11 @@ def similarity_join_brute(
 
     def gen(batches):
         rid_b, rmat_b = bc.value
-        r_sq = (rmat_b * rmat_b).sum(axis=1)
-        r_norm = np.sqrt(r_sq)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            lmat = np.asarray(pdf["__vec"].tolist(), dtype="float64")
             lids = pdf["__lid"].to_numpy()
-            gram = lmat @ rmat_b.T
-            if metric in ("l2", "euclidean"):
-                l_sq = (lmat * lmat).sum(axis=1)
-                dist2 = np.maximum(l_sq[:, None] + r_sq[None, :] - 2.0 * gram, 0.0)
-                dmat = np.sqrt(dist2)
-            elif metric == "cosine":
-                l_norm = np.linalg.norm(lmat, axis=1)
-                dmat = 0.5 - 0.5 * gram / (l_norm[:, None] * r_norm[None, :])
-            elif metric in ("dot", "inner_product"):
-                dmat = -gram
-            else:
-                raise ValueError(f"unknown metric {metric!r}")
-            if round_to is not None:
-                # + 0.0 canonicalizes IEEE -0.0 → +0.0 (oracle hashers
-                # distinguish the signs; DuckDB cosine self-match is -0.0)
-                dmat = dmat.round(round_to) + 0.0
+            dmat = dist(np.asarray(pdf["__vec"].tolist(), dtype="float64"), rmat_b)
             if exclude_self:
                 # inf sorts last through argpartition/lexsort; masked
                 # entries are dropped at emission (isfinite filter).
@@ -307,8 +268,7 @@ def batch_knn_brute(
             "use an index (operators.index.batch_probe_search) for "
             "query sets that large"
         )
-    if metric not in ("l2", "euclidean", "cosine", "dot", "inner_product"):
-        raise ValueError(f"unknown metric {metric!r}")
+    dist = _gemm_distance(metric, round_to)
     spark = corpus.sparkSession
     bc = spark.sparkContext.broadcast(tmat)
     # id column keeps its real Spark type (string ids are as common as
@@ -325,8 +285,6 @@ def batch_knn_brute(
 
     def gen(batches):
         t = bc.value
-        t_sq = (t * t).sum(axis=1)
-        t_norm = np.sqrt(t_sq)
         # per-query candidate buffers across the partition's chunks
         cand_d: list = []
         cand_i: list = []
@@ -353,21 +311,8 @@ def batch_knn_brute(
             pdf = pdf.sort_values("__rid", kind="mergesort")
             for lo in range(0, len(pdf), chunk_rows):
                 part = pdf.iloc[lo : lo + chunk_rows]
-                cmat = np.asarray(part["__vec"].tolist(), dtype="float64")
                 cids = part["__rid"].to_numpy()
-                gram = cmat @ t.T  # rows × N
-                if metric in ("l2", "euclidean"):
-                    c_sq = (cmat * cmat).sum(axis=1)
-                    dmat = np.sqrt(
-                        np.maximum(c_sq[:, None] + t_sq[None, :] - 2.0 * gram, 0.0)
-                    )
-                elif metric == "cosine":
-                    c_norm = np.linalg.norm(cmat, axis=1)
-                    dmat = 0.5 - 0.5 * gram / (c_norm[:, None] * t_norm[None, :])
-                else:
-                    dmat = -gram
-                if round_to is not None:
-                    dmat = dmat.round(round_to) + 0.0
+                dmat = dist(np.asarray(part["__vec"].tolist(), dtype="float64"), t)  # rows × N
                 kk = min(k, len(cids))
                 # rows are id-sorted, so the STABLE sort keeps
                 # equal-distance candidates in ascending-id order

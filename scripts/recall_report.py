@@ -70,7 +70,7 @@ def main() -> None:
             hits += len(got & set(exact[q["vec_id"]]))
             from fenix_spark.operators.coder import rank_cells
 
-            cells = rank_cells(coding, q["embedding"], "l2")[:probes]
+            cells = rank_cells(coding, q["embedding"], "l2", limit=probes)
             scanned += sum(cell_counts.get(c, 0) for c in cells)
         ivf_rows.append(
             (probes, hits / (K * len(queries)), scanned / (n_rows * len(queries)))

@@ -129,8 +129,8 @@ _PATHS = (components_mod._MAX_DRIVER_PAIRS, 0)  # driver, propagation
 def test_driver_and_propagation_paths_agree(spark, edges, as_str):
     """Both paths give the same node→component map and the same keep
     list, with and without ``prefer_col``. String ids (``str(i)``, so
-    "10" < "9") check that both order ids the way Spark does; the
-    ``prefer_col`` tie-break negates the id, so it is numeric-only."""
+    "10" < "9") check that both order ids the way Spark does, the
+    ``prefer_col`` tie-break on the minimum id included."""
     key = str if as_str else int
     ddl = "string" if as_str else "bigint"
     edges = [(key(a), key(b)) for a, b in edges]
@@ -147,13 +147,20 @@ def test_driver_and_propagation_paths_agree(spark, edges, as_str):
         out = dedup_keep_list(df, pairs, "id", prefer_col=prefer)
         return sorted(r.id for r in out.collect())
 
-    prefers = (None,) if as_str else (None, "q")
+    prefers = (None, "q")
     got = []
     for cap in _PATHS:
         with _driver_cap(cap):
             got.append((comp_map(), [kept(p) for p in prefers]))
     assert got[0] == got[1]
     assert got[0][0] == _union_find([(a, b) for a, b in edges if a != b])
+    # prefer_col keeps each component's max q (nulls last), min id on ties
+    q = {r["id"]: r["q"] for r in df.collect()}
+    members: dict = {}
+    for node, comp in got[0][0].items():
+        members.setdefault(comp, []).append(node)
+    best = [min(m, key=lambda x: (q[x] is None, -(q[x] or 0.0), x)) for m in members.values()]
+    assert got[0][1][1] == sorted([x for x in q if x not in got[0][0]] + best)
 
 
 def test_nonconvergence_raises_on_both_paths(spark):

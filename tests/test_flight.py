@@ -1631,10 +1631,14 @@ def test_batched_exchange_probes_match_single_target(spark, served):
     """A batched do_exchange reads ``probes`` as a single-target call
     does: None probes every cell, 0 returns no rows, and a count probes
     that many cells — so each query of a 3-target call returns what its
-    own single-target call returns."""
+    own single-target call returns, also on a permuted-centroid coding
+    where the cell ranking is all near-ties."""
     import numpy as np
 
-    _, client, _ = served
+    from fenix_spark.catalog import coding_path
+    from fenix_spark.operators.coder import coding_from_numpy
+
+    _, client, root = served
     rng = np.random.default_rng(17)
     vecs = rng.normal(size=(400, 8))
     client.make_table(
@@ -1654,15 +1658,69 @@ def test_batched_exchange_probes_match_single_target(spark, served):
         },
     )
     targets = [list(map(float, v)) for v in rng.normal(size=(3, 8))]
-    for probes in (None, 0, 16):
-        kw = dict(coding="probe_ivf", maxval=10, probes=probes, id_col="vec_id")
-        batched = client.search(targets, "probe_vecs", "emb", **kw).to_pylist()
-        for qi, target in enumerate(targets):
-            single = client.search(target, "probe_vecs", "emb", **kw)
-            want = single.column("vec_id").to_pylist()
-            got = [r["vec_id"] for r in batched if r["query_index"] == qi]
-            assert got == want, (probes, qi)
-            assert len(want) == (0 if probes == 0 else 10)
+    # 64 centroids that are permutations of one vector: every cell is
+    # the same distance from the all-ones and zero targets in exact
+    # arithmetic, so the probed cells rest on the last bits of each
+    # fold and on the id tie-break
+    base = rng.normal(size=8)
+    cents = np.stack([[rng.permutation(base) for _ in range(64)]])
+    coding_from_numpy(spark, cents, "l2").write.parquet(coding_path(root, "probe_perm"))
+    client.sync_index("probe_perm", "probe_vecs", "emb")
+    for coding, queries in (
+        ("probe_ivf", targets),
+        ("probe_perm", [[1.0] * 8, [0.0] * 8, targets[0]]),
+    ):
+        for probes in (None, 0, 16):
+            kw = dict(coding=coding, maxval=10, probes=probes, id_col="vec_id")
+            batched = client.search(queries, "probe_vecs", "emb", **kw).to_pylist()
+            for qi, target in enumerate(queries):
+                single = client.search(target, "probe_vecs", "emb", **kw)
+                want = single.column("vec_id").to_pylist()
+                got = [r["vec_id"] for r in batched if r["query_index"] == qi]
+                assert got == want, (coding, probes, qi)
+                assert len(want) == (0 if probes == 0 else 10)
+
+
+def test_empty_select_reads_alike_cold_and_warm(served):
+    """A ``select: []`` ticket streams what Spark's ``select()`` gives
+    — no columns, every row — whether or not a plain read of the table
+    has cached its wire schema first, and caches nothing a plain read
+    then takes for its own."""
+    _, client, _ = served
+    client.make_table("emptysel", pa.table({"id": [1, 2, 3], "v": [0.5, 1.5, 2.5]}))
+    ticket = fl.Ticket(json.dumps({"source": "emptysel", "select": []}).encode())
+    cold = client.conn.do_get(ticket).read_all()
+    plain = client.read_table("emptysel").read_all()
+    warm = client.conn.do_get(ticket).read_all()
+    assert (cold.schema.names, cold.num_rows) == ([], 3)
+    assert (plain.schema.names, plain.num_rows) == (["id", "v"], 3)
+    assert warm.equals(cold)
+
+
+def test_coder_trains_past_null_vectors_and_index_serves(spark, served):
+    """make-coder over a table holding a null vector and a null element
+    fits on the other rows (null vectors match nothing, like knn), and
+    make-index over it then serves a search. A column with no row free
+    of nulls raises a ValueError that names it."""
+    import numpy as np
+
+    from fenix_spark.operators.coder import CodingConfig, train_coding
+
+    _, client, _ = served
+    base = _vector_table(np.random.default_rng(23), n=200)
+    emb = base.column("emb").to_pylist()
+    emb[0] = None
+    emb[1] = [None] + emb[1][1:]
+    client.make_table("nullvecs", base.set_column(2, "emb", pa.array(emb, pa.list_(pa.float32()))))
+    client.make_index("nullvecs_ivf", "nullvecs", "emb", config=_VEC_CODING)
+    got = client.search(
+        list(map(float, emb[5])), "nullvecs", "emb",
+        coding="nullvecs_ivf", maxval=5, probes=8, id_col="vec_id",
+    ).column("vec_id").to_pylist()
+    assert len(got) == 5 and got[0] == 5 and not {0, 1} & set(got)
+    nulls = spark.createDataFrame([(None,), ([1.0, None],)], "emb array<double>")
+    with pytest.raises(ValueError, match="'emb'"):
+        train_coding(nulls, "emb", CodingConfig())
 
 
 def test_state_updates_are_safe_under_concurrent_peers(served, monkeypatch):

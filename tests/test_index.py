@@ -118,9 +118,33 @@ def test_probe_recall(embeddings, indexed, coding):
     assert recall >= 0.6, f"recall@10 probes=16/64 too low: {recall:.3f}"
 
 
-def test_probe_cells_expr_matches_rank_cells(embeddings, coding):
+def _assert_permuted_coding_ranks_alike(spark, metric):
+    """On a coding whose centroids are permutations of one vector,
+    every cell is the same distance from the all-ones query in exact
+    arithmetic, so the ranking rests on the last bits of each fold and
+    on the id tie-break: ``rank_cells``, full or with ``limit``, must
+    still equal ``probe_cells_expr``."""
+    from fenix_spark.operators.coder import coding_from_numpy
+
+    rng = np.random.default_rng(0)
+    base = rng.normal(size=64 // N)
+    perm = coding_from_numpy(
+        spark, np.stack([[rng.permutation(base) for _ in range(K)] for _ in range(N)]), metric
+    )
+    ones = [1.0] * 64
+    got = (
+        spark.createDataFrame([(ones,)], "embedding array<float>")
+        .select(probe_cells_expr("embedding", perm, probes=16).alias("cells"))
+        .head()["cells"]
+    )
+    assert list(got) == rank_cells(perm, ones, metric)[:16]
+    assert list(got) == rank_cells(perm, ones, metric, limit=16)
+
+
+def test_probe_cells_expr_matches_rank_cells(spark, embeddings, coding):
     """The native per-row probe derivation must agree with the
-    driver-side numpy ranking for every vector."""
+    driver-side numpy ranking for every vector, and on a
+    permuted-centroid coding."""
     got = {
         r["vec_id"]: list(r["cells"])
         for r in embeddings.select(
@@ -129,12 +153,14 @@ def test_probe_cells_expr_matches_rank_cells(embeddings, coding):
     }
     for r in embeddings.limit(25).collect():
         assert got[r["vec_id"]] == rank_cells(coding, r["embedding"], "l2")[:16]
+    _assert_permuted_coding_ranks_alike(spark, "l2")
 
 
 @pytest.mark.parametrize("metric", ["cosine", "dot"])
 def test_probe_cells_expr_matches_rank_cells_per_metric(spark, embeddings, coding, metric):
     """The one rendered cell scorer agrees with the numpy ranking row
-    for row for cosine and dot codings too, not only l2."""
+    for row for cosine and dot codings too, not only l2, and on a
+    permuted-centroid coding."""
     from fenix_spark.operators.coder import coding_from_numpy
 
     typed = coding_from_numpy(spark, coding_to_numpy(coding)[0], metric)
@@ -145,6 +171,7 @@ def test_probe_cells_expr_matches_rank_cells_per_metric(spark, embeddings, codin
     assert len(got) == 200
     for r in got:
         assert list(r["cells"]) == rank_cells(typed, r["embedding"], metric)[:16]
+    _assert_permuted_coding_ranks_alike(spark, metric)
 
 
 def test_probe_cells_expr_quotes_backtick_column(embeddings, coding):
