@@ -1112,7 +1112,7 @@ class Server:
             # one copy: float64, column-major, so each fold step is contiguous
             mat = flat.to_numpy(zero_copy_only=False).reshape(-1, q.size)
             dist = fold_distance(metric, mat.astype("float64", order="F").T, q)
-            if dist is None or np.isnan(dist).any():
+            if np.isnan(dist).any():
                 return None
         if id_col is None:
             order = np.argsort(dist, kind="stable")

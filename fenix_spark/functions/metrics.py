@@ -207,18 +207,18 @@ def fold_distance(metric: str, cols, target):
     rows), BIT-IDENTICAL to the Spark expression: the same operator
     tree, and every dot product the same left fold from 0.0 over the
     dimension (``_fold``). ``target`` is one vector, or a dim × rows
-    matrix of one target per row. Returns None where Spark divides by
-    zero (cosine with a zero-norm vector), whose semantics only Spark
-    can give."""
+    matrix of one target per row. Cosine with a zero-norm vector, where
+    Spark divides by zero (null, or an error under ANSI), is NaN: it
+    ranks last, and a caller that must match Spark's answer refuses it."""
     v = np.asarray(target, dtype="float64")
     kind = _kind(metric)
     if kind != "cosine":
         d = _fold_sum(metric, cols, v)
         return np.sqrt(d) if kind == "l2" else d
     denom = np.sqrt(_fold(cols, cols, np.multiply)) * np.sqrt(_fold(v, v, np.multiply))
-    if not denom.all():
-        return None
-    return 0.5 - (0.5 * _fold(cols, v, np.multiply)) / denom
+    with np.errstate(divide="ignore", invalid="ignore"):
+        d = 0.5 - (0.5 * _fold(cols, v, np.multiply)) / denom
+    return np.where(denom == 0, np.nan, d)
 
 
 def _gemm_distance(metric: str, round_to: int | None = None):

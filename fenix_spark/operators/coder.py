@@ -206,25 +206,21 @@ def _per_cell(fold, cents: np.ndarray, target, metric: str) -> np.ndarray:
     """``fold(metric, u, v)`` of every centroid of an (n, k, sub_dim)
     array against its codebook's slice of ``target``, as an (n, k)
     array: ONE fold over the sub-dimension, step i taking coordinate i
-    of all n·k centroids and of their sub-queries."""
+    of all n·k centroids and of their sub-queries. A target shorter
+    than n·sub_dim raises."""
     n, k, sub_dim = cents.shape
-    # a short target's missing coordinates score NaN (the SQL scorers'
-    # zip_with reads them as null), so ranking it raises no error and
-    # the search's own answer or error stands
-    q = np.full(n * sub_dim, np.nan)
-    t = np.asarray(target, dtype="float64")[: q.size]
-    q[: t.size] = t
+    q = np.asarray(target, dtype="float64")
+    if q.size < n * sub_dim:
+        raise ValueError(f"target has {q.size} elements; the coding needs {n * sub_dim}")
     u = cents.transpose(2, 0, 1).reshape(sub_dim, n * k)
-    d = fold(metric, u, np.repeat(q.reshape(n, sub_dim).T, k, axis=1))
-    if d is None:
-        raise ValueError("cosine ranks no cell against a zero-norm query or centroid sub-vector")
-    return d.reshape(n, k)
+    v = np.repeat(q[: n * sub_dim].reshape(n, sub_dim).T, k, axis=1)
+    return fold(metric, u, v).reshape(n, k)
 
 
-# Densely scoring k^n joint cells allocates a k^n float64 array —
-# ideal at the reference config (64 cells), catastrophic at production
-# PQ shapes (16^8 cells = 34 GB on the driver). Above this bound a
-# full ranking raises; a ranking with ``limit`` is a beam fold anyway.
+# Scoring all k^n joint cells allocates k^n float64s — ideal at the
+# reference config (64 cells), catastrophic at production PQ shapes
+# (16^8 cells = 34 GB on the driver). Above this bound a full ranking
+# raises; a ranking with ``limit`` keeps at most limit·k cells a step.
 _MAX_DENSE_CELLS = 1 << 22
 
 
@@ -241,27 +237,20 @@ def rank_cells(
 
 def rank_centroids(cents: np.ndarray, target, metric: str, limit: int | None = None) -> list[int]:
     """``rank_cells`` over an already-decoded (n, k, sub_dim) centroid
-    array, from ``fold_distance`` (the bits the SQL scorers compute).
-    ``limit=None`` ranks ALL cells densely, up to ``_MAX_DENSE_CELLS``
-    (the twin of ``index.probe_cells_expr``); with ``limit`` set the
-    ranking is the beam fold ``_beam_rank`` (the twin of
-    ``index.probe_cells_join``) at every k^n.
-    """
+    array, from ``fold_distance`` (the bits the SQL scorers compute),
+    through the beam fold ``_beam_rank`` alone. ``limit=None`` ranks all
+    k^n cells (the beam then prunes nothing), up to ``_MAX_DENSE_CELLS``.
+    Under cosine a zero-norm sub-query or centroid scores NaN and ranks
+    last."""
     n, k, _ = cents.shape
-    per_codebook = _per_cell(fold_distance, cents, target, metric)
-    if limit is not None:
-        return _beam_rank(per_codebook, limit)
-    if k**n > _MAX_DENSE_CELLS:
+    if limit is None and k**n > _MAX_DENSE_CELLS:
         raise ValueError(
-            f"ranking all {k**n:,} joint cells densely would allocate "
+            f"ranking all {k**n:,} joint cells would allocate "
             f"{k**n * 8 / 2**30:.0f} GiB on the driver; pass limit= "
             "(e.g. the probe count) for the beam path"
         )
-    # score[joint] = Σ_j per_codebook[j][digit_j(joint)]
-    score = np.zeros(k**n)
-    for j in range(n):
-        score += np.tile(np.repeat(per_codebook[j], k ** (n - 1 - j)), k**j)
-    return [int(i) for i in np.lexsort((np.arange(k**n), score))]
+    per_codebook = _per_cell(fold_distance, cents, target, metric)
+    return _beam_rank(per_codebook, k**n if limit is None else limit)
 
 
 def _beam_rank(per_codebook: np.ndarray, limit: int) -> list[int]:
@@ -269,10 +258,12 @@ def _beam_rank(per_codebook: np.ndarray, limit: int) -> list[int]:
     distances, codebook 0 most significant — ``probe_cells_join``'s SQL
     fold step for step (shortlists of min(k, limit) cells, left-to-right
     float adds from 0.0, Spark's order: NaN last, -0.0 == 0.0, ties by
-    joint id), so both return bit-identical rankings. It is the dense
-    ranking's prefix up to rounding: two prefix scores an ulp apart can
-    round to one sum, where the dense order lets a pruned lower joint
-    id in. With n = 2 and ``limit`` ≥ k nothing is pruned early."""
+    joint id), so both return bit-identical rankings. With ``limit`` ≥
+    k^n nothing is pruned and it is the full ranking (the twin of
+    ``index.probe_cells_expr``); with less it is that ranking's prefix
+    up to rounding: two prefix scores an ulp apart can round to one
+    sum, where the full order lets a pruned lower joint id in. With
+    n = 2 and ``limit`` ≥ k nothing is pruned early."""
     k = per_codebook.shape[1]
     score, joint = np.zeros(1), np.zeros(1, dtype="int64")
     for d in per_codebook:

@@ -44,7 +44,7 @@ truncation: a partially-converged labeling would silently under-dedup.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from fenix_spark.checkpoint import checkpoint_eager as _ckpt_eager
 
@@ -243,15 +243,19 @@ def dedup_keep_list(
             ),
             "node",
         )
-        # per-component winner: max prefer (nulls last), min id on
-        # ties — ids of any orderable type, none negated
-        best = Window.partitionBy("component").orderBy(
-            F.col("__pref").desc_nulls_last(), F.col("node").asc()
+        # per-component winner: max prefer (nulls last), then min id
+        # among the members holding it — two partially aggregated
+        # group-bys, ids of any orderable type, none negated
+        best = scored.groupBy("component").agg(
+            F.max(
+                F.struct(F.col("__pref").isNotNull().alias("has"), F.col("__pref").alias("pref"))
+            ).alias("__best")
         )
         winners = (
-            scored.withColumn("__rank", F.row_number().over(best))
-            .where(F.col("__rank") == 1)
-            .select("component", F.col("node").alias("__keep_id"))
+            scored.join(best, "component")
+            .where(F.col("__pref").eqNullSafe(F.col("__best.pref")))
+            .groupBy("component")
+            .agg(F.min("node").alias("__keep_id"))
         )
         drop = (
             comp.join(winners, "component")

@@ -315,7 +315,7 @@ def _ivf_probe_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     coding, indexed = ensure_artifacts(spark, sf_dir)
     target = _query_vector(spark, sf_dir)
-    cells = rank_cells(coding, target, "l2")[:16]
+    cells = rank_cells(coding, target, "l2", limit=16)
     return (
         indexed.where(F.col(CODE_COL).isin(cells))
         .select(

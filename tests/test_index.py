@@ -405,11 +405,29 @@ def test_adc_candidate_scan_reads_no_vector(indexed, coding, embeddings):
     assert "embedding" not in scan, scan
 
 
-def test_adc_cosine_raises(coding):
-    from fenix_spark.operators.index import adc_lut
+def test_adc_cosine_raises(indexed, coding):
+    """ADC refuses cosine, and a target shorter than the coding's
+    n·sub_dim: its tables would be the answer, so no row is scored."""
+    from fenix_spark.operators.index import adc_lut, adc_search
 
     with pytest.raises(ValueError, match="cosine"):
         adc_lut(coding, [0.0] * 64, "cosine")
+    with pytest.raises(ValueError, match="63 elements"):
+        adc_search(indexed, coding, "embedding", [1.0] * 63, metric="l2", k=10)
+
+
+def test_cosine_ranking_scores_a_zero_sub_vector_last(spark):
+    """Under cosine a zero-norm centroid or sub-query scores NaN (Spark
+    divides by zero there) and ranks last, ties by id, instead of
+    failing the whole single-target search."""
+    from fenix_spark.operators.coder import coding_from_numpy
+
+    cents = np.random.default_rng(5).normal(size=(2, 4, 2))
+    cents[1, 0] = 0.0
+    zero_cell = coding_from_numpy(spark, cents, "cosine")
+    ranked = rank_cells(zero_cell, [0.3, -1.0, 0.5, 2.0])
+    assert sorted(ranked) == list(range(16)) and ranked[-4:] == [0, 4, 8, 12]
+    assert rank_cells(zero_cell, [0.0, 0.0, 0.5, 2.0], limit=5) == [0, 1, 2, 3, 4]
 
 
 def test_append_to_index_equals_full_rebuild(spark, embeddings, coding, tmp_path_factory):
